@@ -1163,9 +1163,10 @@ def connected_components(
     MinHash candidate generation) once per round, and Catalyst re-plans
     an exponentially growing tree.  Checkpoints are LAZY and fused with
     the action that already exists (the per-round convergence count /
-    the one-time node count), so each round is ONE job, not two; blocks
-    are freed with the DataFrame.  On a cluster where executor loss
-    during the loop matters, set a reliable checkpoint dir and swap in
+    the one-time node count), so on the shuffle path each round is ONE
+    job, not two (broadcast mode adds jobs, see below); blocks are freed
+    with the DataFrame.  On a cluster where executor loss during the
+    loop matters, set a reliable checkpoint dir and swap in
     ``checkpoint()``.
 
     Join shape: the label relation has exactly one row per node in the
@@ -1173,8 +1174,10 @@ def connected_components(
     broadcast decision is made ONCE from the node count (same raw-byte
     cap as ``_maybe_broadcast``).  While small, both per-round joins run
     as broadcast-hash (zero exchanges in the round job beyond the
-    neighbor-min groupBy); past the cap the shuffle join is the correct
-    shape at 100 TB.
+    neighbor-min groupBy), but each ``BroadcastExchange`` (labels and
+    neighbor-min) submits its own collect job, so a broadcast round runs
+    two collect jobs beside its count job; past the cap the shuffle
+    join is the correct shape at 100 TB.
 
     Returns (id, cluster_id) for every node that appears in a pair.
     """

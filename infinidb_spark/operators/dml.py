@@ -1091,8 +1091,7 @@ def _pinned_versions(table_dir: str) -> set[str]:
 
 
 #: directory-identity memo for _snapshot: {dir: (dir mtime_ns,
-#: {filename: (size, mtime_ns)}, [subdir names])}.  LRU-bounded like
-#: the sharded manifest's shard cache.
+#: {filename: (size, mtime_ns)}, [subdir names])}.  LRU-bounded.
 _SNAP_CACHE: "OrderedDict[str, tuple[int, dict[str, tuple[int, int]], list[str]]]" = (
     OrderedDict()
 )
@@ -1146,10 +1145,9 @@ def _snapshot(table_dir: str) -> tuple[str, str, dict[str, tuple[int, int]]]:
     let a rewrite silently drop freshly-inserted rows.  mtime_ns in the
     identity guards the pathological same-name-same-size rewrite.
 
-    The identity map ``{relpath: (size, mtime_ns)}`` is the same
-    per-file identity the sharded manifest memoizes
-    (manifest_sharded.py refresh); the conflict path diffs two of these
-    maps so it reads only CHANGED files, never the whole table.
+    The conflict path diffs two identity maps ``{relpath: (size,
+    mtime_ns)}`` so it reads only CHANGED files, never the whole
+    table.
 
     Cost: O(directories) stat + O(changed-directory files) scandir per
     statement, NOT O(files) — each directory's listing is memoized
@@ -1162,11 +1160,11 @@ def _snapshot(table_dir: str) -> tuple[str, str, dict[str, tuple[int, int]]]:
     unconditionally, so a concurrent writer in the same timestamp tick
     can never alias a stale listing.
 
-    LIMIT (same as manifest_sharded.refresh): the memo keys on the
-    PARENT directory's mtime, which an in-place rewrite of an existing
-    file (open + truncate on the same name) does NOT bump — such an
-    external edit is invisible to conflict detection until something
-    creates/renames/unlinks in that directory.  No writer in this
+    LIMIT: the memo keys on the PARENT directory's mtime, which an
+    in-place rewrite of an existing file (open + truncate on the same
+    name) does NOT bump — such an external edit is invisible to
+    conflict detection until something creates/renames/unlinks in that
+    directory.  No writer in this
     engine modifies parquet in place, so the blind spot only matters
     for table dirs also written by EXTERNAL tools; for those, set
     ``INFINIDB_SPARK_SNAPSHOT_NO_MEMO=1`` to stat every file on every

@@ -66,10 +66,10 @@ def _build_once(work: str, done_name: str, build, clear: tuple = ()) -> None:
 
 def _clustered_lineitem(spark: SparkSession, sf_dir: str) -> str:
     """Build-once 8-file l_orderkey-clustered lineitem layout shared by
-    BOTH extent-elimination queries (loop pruner and sharded manifest).
-    ONE owner for the layout contract: the two queries share the same
-    workdir + sentinel, so two inline copies could silently hand one
-    query a layout built with the other's parameters if they drifted."""
+    BOTH extent-elimination queries.  ONE owner for the layout
+    contract: the two queries share the same workdir + sentinel, so two
+    inline copies could silently hand one query a layout built with the
+    other's parameters if they drifted."""
     from infinidb_spark.sources.layout import cluster_write
 
     src = os.path.join(sf_dir, "lineitem.parquet")
@@ -244,17 +244,15 @@ def extent_elimination_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def manifest_sharded_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Extent elimination through the SHARDED, VECTORIZED manifest
-    (sources/manifest_sharded.py ≅ the shared-memory-resident extent
-    map, `versioning/BRM/extentmap.h:116-148`): stats live in hash-
-    sharded Parquet, refresh rewrites only dirty shards, and the file
-    list is pruned by ONE DuckDB predicate over the stats relation —
-    the 10⁵–10⁶-file posture where a JSON sidecar + Python loop
-    becomes a planner bottleneck.  Same result-transparency contract:
-    the oracle is a plain WHERE over the full table."""
-    from infinidb_spark.sources.manifest_sharded import scan_with_sharded_manifest
-
-    pruned = scan_with_sharded_manifest(
+    """Extent elimination on a second key range plus a DOUBLE predicate
+    (``l_discount <= 0.05``), through the same extent map as
+    extent_elimination_scan (`versioning/BRM/extentmap.h:103`): over
+    the shared clustered layout it is served from ``cached_manifest``'s
+    memo instead of re-reading footers.  Same result-transparency
+    contract: the oracle is a plain WHERE over the full table.  The
+    name dates from a second, sharded pruner that has been removed; it
+    stays because the harness registry lists it."""
+    pruned = scan_with_manifest(
         spark,
         _clustered_lineitem(spark, sf_dir),
         [("l_orderkey", "between", 1200, 2400), ("l_discount", "<=", 0.05)],

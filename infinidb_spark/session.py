@@ -22,9 +22,9 @@ cluster reading 100 TB):
   measurement at sf1 showed multi-second builds of 1.5 M-row sides
   losing 2-4× to a 32-way shuffle (tpch_q5 4.37→1.04 s, q3 3.40→0.84,
   q21 3.29→1.03; bench at sf0.1 unchanged — no side there sits in the
-  10-64 MB band; plans/r12/bht_ab.jsonl).  At 100 TB oversized
-  broadcasts are driver OOMs, not wins.  ``SPARK_GRAFT_BHT`` overrides
-  (bytes) for deployments whose dimension tables genuinely fit.
+  10-64 MB band).  At 100 TB oversized broadcasts are driver OOMs, not
+  wins.  ``SPARK_GRAFT_BHT`` overrides (bytes) for deployments whose
+  dimension tables genuinely fit.
 * shuffle.partitions is a local default; on a real cluster set it to
   2-3× total cores or rely on AQE coalescing.
 * session timezone pinned UTC so date/time semantics are deterministic
@@ -120,9 +120,9 @@ def get_spark(app_name: str = "infinidb-spark", cpus: int | None = None) -> Spar
         # where a high-cardinality aggregation's partial output lands
         # under the advisory.  Large shuffles still split by the 64 MB
         # advisory (the floor only ever LOWERS the target).  A 6-round
-        # interleaved bench A/B (plans/r12/parallelismFirst_ab.jsonl)
-        # shows no measurable sf0.1 cost for the default (minima 4.175
-        # vs 4.294 s, inside the box's noise band), so no override.
+        # interleaved bench A/B shows no measurable sf0.1 cost for the
+        # default (minima 4.175 vs 4.294 s, inside the box's noise
+        # band), so no override.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Broadcast cap: Spark's 10 MB default (see module docstring —
         # the 64 MB reference-mirroring cap lost to measurement at sf1:

@@ -11,21 +11,25 @@ Spark analog, two layers:
 
 * **row-group / page skip** — free: the vectorized Parquet reader prunes
   row groups against pushed filters (SURVEY §4).  Nothing to build.
-* **file-level skip at PLAN time** — this module.  Parquet footers are
-  harvested once into a persistable manifest (extent map ≅ one row per
-  file); a scan is then planned against only the surviving file list, so
-  eliminated files never become input splits at all.  On a 100 TB /
-  100k-file table that is the difference between scheduling tasks that
-  each open a footer just to skip it, and never scheduling them — the
-  same plan-time-vs-run-time distinction the reference draws between
-  extent elimination (ExeMgr, before dispatch) and block filtering (PM).
+* **file-level skip at PLAN time** — this module, the engine's ONE
+  extent map.  Parquet footers are harvested into an in-memory manifest
+  (extent map ≅ one row per file) memoized per file identity
+  (``cached_manifest``); a scan is then planned against only the
+  surviving file list (``prune``), so eliminated files never become
+  input splits at all — the plan-time-vs-run-time distinction the
+  reference draws between extent elimination (ExeMgr, before dispatch)
+  and block filtering (PM).
 
-Scale notes: footers are a few KB each; harvesting is a driver-side
-metadata pass exactly like a Delta/Iceberg log replay, done ONCE and
-persisted (``write_manifest``/``read_manifest``), not per query.  The
-manifest itself stays small (one row per file × stat columns) and can be
-loaded as a DataFrame (``manifest_df``) for introspection — the analog
-of the reference's `editem -i` extent-map dump.
+The memo is what keeps footer reads O(changed files): an append reads
+only the new footers, a hard-linked DML survivor hits by inode.  ANALYZE
+TABLE persists the map as a JSON sidecar inside the table directory
+(``write_manifest``, the BRM save-file analog) so a fresh process seeds
+the memo without footer reads.  Scans never write anything.  Pruning is
+a Python loop over the entries — a few ms per 10³ files, far below the
+Spark job floor, and the tables this engine serves have 1-10 files.  The
+manifest can be loaded as a DataFrame (``manifest_df``) for
+introspection — the analog of the reference's `editem -i` extent-map
+dump.
 
 Elimination is conservative: a file survives unless its stats PROVE no
 row can match (missing stats, all-NULL columns, or unknown operators
@@ -243,9 +247,9 @@ def _duck_con():
 #: persisted extent map (the BRM keeps it resident; re-reading footers
 #: per query is pure overhead).  Same keying idiom as session.py's
 #: table cache; stale keys for a path are evicted on refresh.  LRU-
-#: bounded like _SHARDED_CACHE: stale-key eviction only covers the
-#: SAME path, so a session scanning many short-lived table dirs would
-#: otherwise accumulate full per-file manifests forever.
+#: bounded: stale-key eviction only covers the SAME path, so a session
+#: scanning many short-lived table dirs would otherwise accumulate full
+#: per-file manifests forever.
 _MANIFEST_CACHE: "OrderedDict[tuple, list[dict[str, Any]]]" = OrderedDict()
 _MANIFEST_CACHE_MAX = 64
 
@@ -349,6 +353,17 @@ def _may_match(entry: dict[str, Any], pred: Predicate) -> bool:
     if st is None or st["min"] is None or st["max"] is None:
         return True
     mn, mx = st["min"], st["max"]
+    lits = pred[2] if op == "in" else pred[2:]
+    if isinstance(mn, float) or any(isinstance(v, float) for v in lits):
+        # Spark compares an integral/decimal column with a DOUBLE
+        # literal (and a DOUBLE column with an integral literal) as
+        # doubles, so the residual filter matches 2**53 + 1 = 2.0**53;
+        # Python compares them exactly and would drop that file.
+        # float() is monotone, so widening the bounds the same way
+        # keeps every file the filter can match.
+        mn, mx = _as_float(mn), _as_float(mx)
+        lits = [_as_float(v) for v in lits]
+        pred = (col, op, lits) if op == "in" else (col, op, *lits)
 
     def _co(v):
         # coerce the literal to the STAT's temporal type — the most
@@ -392,6 +407,19 @@ def _may_match(entry: dict[str, Any], pred: Predicate) -> bool:
     return True  # unknown operator → keep the file
 
 
+def _as_float(v):
+    """``v`` as a double when it is a number; anything else unchanged
+    (an incomparable pair then keeps the file as usual)."""
+    import decimal
+
+    if isinstance(v, (int, decimal.Decimal)) and not isinstance(v, bool):
+        try:
+            return float(v)
+        except OverflowError:
+            return v
+    return v
+
+
 def prune(manifest: list[dict[str, Any]], predicates: list[Predicate]) -> list[str]:
     """Files that survive extent elimination (AND of all predicates)."""
     return [
@@ -420,46 +448,17 @@ def scan_with_manifest(
     path: str,
     predicates: list[Predicate],
     manifest: list[dict[str, Any]] | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """Plan a scan over only the files that can match, filters re-applied.
 
-    The returned DataFrame's file list is the pruned one — eliminated
-    files never become input splits.  Row-group skip within surviving
-    files still happens natively (predicates are pushed down as usual).
-
-    .. note:: ON-DISK SIDE EFFECT — the default path WRITES a
-       ``<path>.__manifest__/`` shard directory next to the data (and
-       refreshes it on later scans) whenever the parent directory is
-       writable.  Callers that need a read-only scan — directory
-       trees that get rsync'd/diffed, shared datasets, audit reads —
-       pass ``persist=False`` to use the in-memory loop pruner instead
-       (same survivors, no files created).
-
-    DEFAULT PATH: delegates to the sharded vectorized extent map
-    (manifest_sharded.py — Parquet shards, one DuckDB predicate over
-    the Arrow stats relation, <100 ms over 100k files), which is the
-    posture that survives 10⁵–10⁶ files.  The Python-loop pruner below
-    remains for three callers: an explicitly-passed ``manifest``
-    (tests, pre-built stats), ``persist=False``, and tables whose
-    parent directory is read-only.  Survivor equality between the two
-    pruners is pinned by tests/test_manifest_sharded.py."""
-    if manifest is None and predicates and persist:
-        real = os.path.realpath(path.rstrip("/"))
-        # the shard dir lands next to the UNRESOLVED path
-        # (<path>.__manifest__), so test THAT parent for writability —
-        # a symlink's target parent being writable says nothing about
-        # where the shards would be created
-        parent = os.path.dirname(os.path.abspath(path.rstrip("/"))) or "."
-        # directories only: the sharded map keys files by basename
-        # within the table dir, which has no meaning for a single
-        # parquet FILE path (the loop pruner below supports those)
-        if os.path.isdir(real) and os.access(parent, os.W_OK):
-            from infinidb_spark.sources.manifest_sharded import (
-                scan_with_sharded_manifest,
-            )
-
-            return scan_with_sharded_manifest(spark, path, predicates)
+    ``path`` is a table directory or a single parquet file; its extent
+    map comes from ``cached_manifest`` unless a pre-built ``manifest``
+    is passed.  The returned DataFrame's file list is the pruned one —
+    eliminated files never become input splits.  Row-group skip within
+    surviving files still happens natively (predicates are pushed down
+    as usual).  A hive-partitioned directory has no top-level files to
+    map and falls back to a plain filtered scan.  Read-only: nothing is
+    written next to the data."""
     manifest = manifest if manifest is not None else cached_manifest(path)
     if not predicates:  # nothing to eliminate with — plain full scan
         return spark.read.parquet(path)
@@ -593,10 +592,10 @@ def write_manifest(manifest: list[dict[str, Any]], out_path: str) -> None:
     src_dir = (
         os.path.dirname(os.path.abspath(manifest[0]["file"])) if manifest else ""
     )
-    # tmp + os.replace, the same idiom as partitions._write_sidecar and
-    # ShardedManifest._write_shard: a crash mid-dump would otherwise
-    # leave a permanently truncated sidecar (JSONDecodeError on every
-    # explicit load; _sidecar_seed silently {} forever)
+    # tmp + os.replace, the same idiom as partitions._write_sidecar: a
+    # crash mid-dump would otherwise leave a permanently truncated
+    # sidecar (JSONDecodeError on every explicit load; _sidecar_seed
+    # silently {} forever)
     tmp = out_path + ".tmp"
     with open(tmp, "w") as fh:
         json.dump({"version": 2, "dir": src_dir, "entries": entries}, fh)

@@ -43,6 +43,7 @@ def main() -> None:
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
+        os.makedirs("plans/r11", exist_ok=True)
         with open(f"plans/r11/{name}_{tag}.txt", "w") as f:
             f.write(buf.getvalue())
         for i in range(passes):

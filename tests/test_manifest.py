@@ -116,6 +116,71 @@ def test_statless_file_is_never_eliminated(tmp_path):
     assert prune(m, [("k", "=", 999)]) == [f]
 
 
+def _entry(name, mn, mx, col="k"):
+    """A hand-built extent-map entry for one file with one stat column."""
+    return {"file": name, "rows": 5,
+            "columns": {col: {"min": mn, "max": mx, "null_count": 0}}}
+
+
+def test_conservative_on_mixed_and_missing_stats():
+    """A poisoned column (no min/max) survives every predicate on it, a
+    column with no stats entry keeps every file, and a literal that
+    cannot compare with the stats keeps them."""
+    m = [_entry("a", 0, 10), _entry("b", None, None)]
+    assert prune(m, [("k", "=", 999)]) == ["b"]
+    assert prune(m, [("nosuch", "=", 1)]) == ["a", "b"]
+    assert prune(m, [("k", "=", "not-a-number")]) == ["a", "b"]
+
+
+def test_cross_file_type_conflict_keeps_files():
+    """Schema evolution can land the same column with int stats in one
+    file and string stats in another; pruning must keep every file whose
+    stats cannot be compared with the literal, not raise."""
+    m = [_entry("a", 1, 9, "c"), _entry("b", "x", "z", "c")]
+    assert prune(m, [("c", "=", 5)]) == ["a", "b"]
+    assert prune(m, [("c", "=", "y")]) == ["a", "b"]
+    # a comparable literal outside both ranges still drops the int file
+    assert prune(m, [("c", "=", 50)]) == ["b"]
+
+
+def test_big_int_stats_beside_float_stats_keep_their_files():
+    """Int stats above 2**53 beside float stats in another file: each
+    file is compared on its own stats (no shared column type rounds the
+    big int), so the big-int file is kept for its own key and the float
+    file for a float key."""
+    big = 2**53 + 1
+    m = [_entry("a", big, big), _entry("b", 1.5, 2.5)]
+    assert prune(m, [("k", "=", big)]) == ["a"]
+    assert prune(m, [("k", "between", big, big + 2)]) == ["a"]
+    assert prune(m, [("k", "=", 2.0)]) == ["b"]
+    # small ints beside floats compare exactly as well
+    m = [_entry("a", 7, 9), _entry("b", 1.5, 2.5)]
+    assert prune(m, [("k", "=", 8)]) == ["a"]
+
+
+def test_lossy_int_float_promotion_keeps_files():
+    """A DOUBLE literal against int stats above 2**53 promotes the stats
+    to double, as the residual filter does: 2**53 + 1 rounds to 2.0**53,
+    so the file holding it is kept, not eliminated by an exact int
+    comparison."""
+    big = 2**53 + 1
+    m = [_entry("a", big, big), _entry("b", 1.5, 2.5)]
+    assert prune(m, [("k", "=", 2.0**53)]) == ["a"]
+
+
+def test_double_literal_on_bigint_keeps_matching_file(spark, tmp_path):
+    """Spark evaluates ``bigint_col = <double>`` in double precision, so
+    the row 2**53 + 1 matches 2.0**53; the pruned scan must return it
+    like the plain filter does."""
+    t = str(tmp_path / "big")
+    big = 2**53 + 1
+    spark.createDataFrame([(big,)], "k long").coalesce(1).write.parquet(t)
+    preds = [("k", "=", 2.0**53)]
+    plain = spark.read.parquet(t).filter(F.col("k") == 2.0**53).count()
+    assert plain == 1
+    assert scan_with_manifest(spark, t, preds).count() == plain
+
+
 def test_cached_manifest_memoizes_and_invalidates(spark, tmp_path):
     from infinidb_spark.sources.manifest import cached_manifest
 
@@ -378,8 +443,7 @@ def test_gate_elimination_layout_actually_prunes(spark, sf_dir):
 
 
 def test_scan_with_manifest_single_file(spark, tmp_path):
-    """A single parquet FILE path must keep working now that the default
-    directory path delegates to the sharded manifest."""
+    """A single parquet FILE path prunes like a one-file table."""
     import os
 
     from infinidb_spark.sources.manifest import scan_with_manifest
@@ -391,37 +455,38 @@ def test_scan_with_manifest_single_file(spark, tmp_path):
     assert df.count() == 9
 
 
-def test_scan_with_manifest_persist_false_writes_nothing(spark, tmp_path):
-    """persist=False is the read-only path: same survivors via the loop
-    pruner, and NO <path>.__manifest__ shard dir appears next to the
-    data (ADVICE r07: the default path's on-disk side effect needs an
-    opt-out for rsync'd / shared / audit-read trees)."""
+def test_scan_with_manifest_writes_nothing(spark, tmp_path):
+    """A default scan of a WRITABLE table is read-only: the same
+    survivors as pruning the table's extent map by hand, and no
+    <path>.__manifest__ directory or any other file appears next to
+    the data or inside it."""
     import os
 
-    from infinidb_spark.sources.manifest import scan_with_manifest
+    from infinidb_spark.sources.manifest import cached_manifest, scan_with_manifest
 
     t = str(tmp_path / "t")
-    spark.range(100).selectExpr("id AS k", "id % 7 AS v").repartition(4).write.parquet(t)
+    spark.range(100).selectExpr("id AS k", "id % 7 AS v").repartitionByRange(
+        4, "k"
+    ).write.parquet(t)
+    before = (sorted(os.listdir(tmp_path)), sorted(os.listdir(t)))
 
     preds = [("k", ">=", 50)]
-    got = scan_with_manifest(spark, t, preds, persist=False)
+    got = scan_with_manifest(spark, t, preds)
+    want = prune(cached_manifest(t), preds)
+    assert 1 <= len(want) < 4  # elimination really happens
+    assert sorted(got.inputFiles()) == sorted("file://" + f for f in want)
     assert got.count() == 50
     assert not os.path.exists(t + ".__manifest__")
-
-    # default path on the same table does persist (and agrees)
-    got2 = scan_with_manifest(spark, t, preds)
-    assert got2.count() == 50
-    assert os.path.isdir(t + ".__manifest__")
+    assert (sorted(os.listdir(tmp_path)), sorted(os.listdir(t))) == before
 
 
 def test_partitioned_table_scan_is_not_vacuous(spark, tmp_path):
-    """A hive-partitioned table has NO top-level member files; both
-    pruners previously read that as an empty manifest and returned ZERO
-    rows for a table full of data (code-review r08).  They now fall
-    back to a plain filtered scan (partition pruning still applies
+    """A hive-partitioned table has NO top-level member files; the
+    pruner previously read that as an empty manifest and returned ZERO
+    rows for a table full of data (code-review r08).  It now falls back
+    to a plain filtered scan (partition pruning still applies
     natively)."""
     from infinidb_spark.sources.manifest import scan_with_manifest
-    from infinidb_spark.sources.manifest_sharded import scan_with_sharded_manifest
 
     t = str(tmp_path / "pt")
     spark.range(100).selectExpr("id AS k", "id % 3 AS dt").write.partitionBy(
@@ -429,5 +494,3 @@ def test_partitioned_table_scan_is_not_vacuous(spark, tmp_path):
     ).parquet(t)
     preds = [("k", ">", 5)]
     assert scan_with_manifest(spark, t, preds).count() == 94
-    assert scan_with_manifest(spark, t, preds, persist=False).count() == 94
-    assert scan_with_sharded_manifest(spark, t, preds).count() == 94

@@ -235,6 +235,21 @@ def test_quantified_three_valued_semantics(spark):
     assert ids(quantified_filter(df, F.col("x"), ">", sub_null, "any")) == [2]
 
 
+def test_quantified_filter_dotted_column(spark):
+    from pyspark.sql import functions as F
+
+    from infinidb_spark.operators.quantified import quantified_filter
+
+    df = spark.createDataFrame([(1,), (5,), (9,)], "x long")
+    sub = spark.createDataFrame([(4.0,), (2.0,)], "p double").selectExpr(
+        "p AS `price.usd`"
+    )
+    got = sorted(
+        r.x for r in quantified_filter(df, F.col("x"), ">", sub, "all").collect()
+    )
+    assert got == [5, 9]
+
+
 def test_group_concat_independent_order_and_nulls(spark):
     from infinidb_spark.operators.aggregates import group_concat
 

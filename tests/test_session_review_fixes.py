@@ -190,22 +190,6 @@ def test_manifest_cache_bounded(spark, tmp_path):
     assert len(M._MANIFEST_CACHE) <= M._MANIFEST_CACHE_MAX
 
 
-def test_sharded_scan_partitioned_skips_cache(spark, tmp_path):
-    from infinidb_spark.sources import manifest_sharded as MS
-
-    d = str(tmp_path / "pt")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id long, k string"
-    ).write.partitionBy("k").parquet(d)
-    before = set(MS._SHARDED_CACHE)
-    out = MS.scan_with_sharded_manifest(
-        spark, d, [("id", ">", 0)]
-    )
-    assert out.count() == 2
-    # a never-consulted ShardedManifest must not evict live entries
-    assert os.path.abspath(d.rstrip("/")) not in set(MS._SHARDED_CACHE) - before
-
-
 def test_information_schema_reports_views(spark, tmp_path):
     """Spark registers dialect views as TEMPORARY temp views, so the
     tableType=='VIEW' branch was dead — every CREATE VIEW reported as

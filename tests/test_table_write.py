@@ -46,3 +46,36 @@ def test_result_delivery_collect_and_arrow_topandas_agree(spark, sf_dir):
     pdf = df.toPandas()
     via_pandas = list(pdf.itertuples(index=False, name=None))
     assert via_collect == via_pandas
+
+
+def test_write_table_cluster_by_range_shuffles(spark, tmp_path):
+    """cluster_by without partition_by must range-shuffle first: each
+    output file's min/max covers a narrow slice, so stats eliminate —
+    a local sort of hash-distributed input left every file spanning
+    the full domain (zero elimination)."""
+    import pyarrow.parquet as pq
+
+    from infinidb_spark.sources.table_write import write_table
+
+    df = spark.range(10_000).withColumnRenamed("id", "k").repartition(8)
+    path = str(tmp_path / "clus_t")
+    # max_records_per_file splits each (sorted) partition sequentially:
+    # with the range shuffle the resulting files are disjoint slices;
+    # under the old local-sort-only shape every file spanned the full
+    # domain regardless of the split
+    write_table(df, path, cluster_by=["k"], max_records_per_file=2000)
+    import glob as _g
+
+    spans = []
+    for f in _g.glob(path + "/part-*.parquet"):
+        md = pq.read_metadata(f)
+        mins, maxs = [], []
+        for rg in range(md.num_row_groups):
+            col = md.row_group(rg).column(0)
+            mins.append(col.statistics.min)
+            maxs.append(col.statistics.max)
+        spans.append((min(mins), max(maxs)))
+    assert len(spans) > 1
+    spans.sort()
+    for (lo1, hi1), (lo2, _) in zip(spans, spans[1:]):
+        assert hi1 <= lo2  # disjoint ranges: range partitioning happened

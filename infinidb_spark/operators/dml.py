@@ -1,4 +1,4 @@
-"""Batch DML over Parquet tables — INSERT / UPDATE / DELETE.
+"""Batch DML over Parquet tables — INSERT / LOAD / UPDATE / DELETE.
 
 Reference: row DML flows through DMLProc + the version buffer for MVCC
 (`dbcon/mysql/ha_calpont_dml.cpp:605` `ha_calpont_impl_write_row_`,
@@ -6,34 +6,32 @@ Reference: row DML flows through DMLProc + the version buffer for MVCC
 UPDATE/DELETE internally run a SELECT to locate rows
 (`calpontselectexecutionplan.h:98-109` IDB_QUERYTYPE UPDATE/DELETE).
 
-Spark-native model: **copy-on-write** over Parquet directories — the
-same model Delta/Iceberg v1 use, and the honest analog of the
-reference's version buffer (old data remains readable until the swap).
+Spark-native model: **copy-on-write** over Parquet directories with ONE
+commit protocol for every row write.  The live path ``<table>`` is a
+symlink to a version directory ``<table>.__v<uuid>__``; a statement
+builds a new version directory and then, under the table's commit lock,
+advances the symlink with a single atomic ``os.replace``.  A crash
+leaves the pointer on either the old or the new version, never missing
+and never a mix — the analog of the reference's version buffer, whose
+pre-image blocks stay readable until the pointer moves.
 
-* INSERT  = append new Parquet files to the table directory (exactly
-  cpimport's incremental load; no rewrite).
-* UPDATE  = SELECT-transform-rewrite: read, apply SET under WHERE,
-  write a new version directory, atomically swap.
-* DELETE  = read, anti-filter, rewrite, swap.
+* UPDATE / DELETE (single- and multi-table) read a pinned snapshot and
+  rewrite it outside the lock; at commit the snapshot token is checked.
+  Unchanged → swap.  Changed → a row-level diff against the winner
+  decides between rebase (disjoint rows: re-execute on the new version)
+  and first-committer-wins abort (``ConcurrentWriteConflict``).
+* INSERT / LOAD write the new rows once into a pinned pending version,
+  check NOT NULL there, then under the lock hard-link every file of the
+  live version in and swap.  An insert cannot conflict.
+* ROLLBACK moves the pointer back to the retained pre-image
+  (``retain_version``).
 
-Atomicity: each rewrite lands in a fresh `<table>.__v<uuid>__` version
-directory and the live path `<table>` is a SYMLINK advanced with a
-single atomic `os.replace` — a crash leaves the pointer on either the
-old or the new version, never missing and never a mix (the Parquet
-analog of the reference's version buffer: old blocks stay readable
-until the pointer moves).  Tables created before the symlink layout
-(plain directories) are migrated on first rewrite; single-writer
-assumed — a real lakehouse deployment swaps in a transaction log
-instead (out of scope, SURVEY §1.1).
-
-Scale notes: plain ``update_table``/``delete_from`` rewrite the whole
-table; at 100 TB use ``update_table_pruned``/``delete_from_pruned`` —
-files whose manifest min/max cannot match the WHERE are HARD-LINKED
-into the new version instead of rewritten (the reference's block-level
-version buffer is the same idea at 8 KB granularity), so a key-ranged
-DML on a clustered table (sources/layout.py) rewrites O(matching
-files).  For directory-partitioned tables, predicate on the partition
-column — Spark prunes those natively.
+Affected-row counts come from an ``Observation`` on the written
+DataFrame, so no statement runs a separate count job.  Tables created
+before the symlink layout (plain directories) are migrated on the first
+swap.  DDL (create/alter/TRUNCATE/drop partitions, OPTIMIZE in
+sources/layout.py) holds the lock for its whole build, and the
+streaming sink links epoch files into the live version.
 """
 
 from __future__ import annotations
@@ -45,7 +43,6 @@ import random
 import shutil
 import time
 import uuid
-from collections import OrderedDict
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -238,6 +235,23 @@ def _retain_path(table_dir: str) -> str:
     return table_dir.rstrip("/") + ".__retain__"
 
 
+def _write_json_atomic(path: str, obj) -> None:
+    """Publish a small JSON sidecar with tmp + ``os.replace``: a crash
+    mid-write leaves the previous content, never a torn file that every
+    later reader would fail to parse."""
+    tmp = path + ".tmp"
+    try:
+        with open(tmp, "w") as fh:
+            json.dump(obj, fh)
+        os.replace(tmp, path)
+    except BaseException:
+        try:
+            os.remove(tmp)
+        except FileNotFoundError:
+            pass
+        raise
+
+
 def retain_version(table_dir: str, version_basename: str) -> None:
     """Protect a version directory from _swap's GC — the transaction
     snapshot anchor (the analog of the reference's version buffer
@@ -245,8 +259,7 @@ def retain_version(table_dir: str, version_basename: str) -> None:
     `versioning/BRM/vss.h:180`)."""
     retained = retained_versions(table_dir)
     retained.add(version_basename)
-    with open(_retain_path(table_dir), "w") as fh:
-        json.dump(sorted(retained), fh)
+    _write_json_atomic(_retain_path(table_dir), sorted(retained))
 
 
 def retained_versions(table_dir: str) -> set[str]:
@@ -408,24 +421,96 @@ def _hive_partition_cols(table_dir: str) -> list[str]:
     return cols
 
 
+def _link_live_files(table_dir: str, new_dir: str) -> None:
+    """Hard-link every file of the live version into ``new_dir``,
+    mirroring subdirectories: data files (hive ``col=value/`` dirs
+    included), the ``_partitions.json`` sidecar and sink ``_epochs/``
+    markers, checksum files.  The live ``_SUCCESS`` (``new_dir`` has its
+    own) and hidden directories (sink epochs still staging) are
+    skipped."""
+    if not os.path.exists(table_dir):
+        return  # first write creates the table
+    real = os.path.realpath(table_dir.rstrip("/"))
+    for dirpath, dirnames, files in os.walk(real):
+        dirnames[:] = [d for d in dirnames if not d.startswith(".")]
+        dst = os.path.join(new_dir, os.path.relpath(dirpath, real))
+        os.makedirs(dst, exist_ok=True)
+        for f in files:
+            if f not in ("_SUCCESS", "._SUCCESS.crc"):
+                os.link(os.path.join(dirpath, f), os.path.join(dst, f))
+
+
+_MATCH = "__idb_match__"
+
+
+def _observe_match(df: DataFrame, match: Column, obs) -> DataFrame:
+    """``df`` plus a boolean ``_MATCH`` column — the statement's WHERE
+    verdict, NULL as FALSE — with the matching-row count observed on
+    ``obs``, so the affected-row count comes out of the write job.  The
+    verdict is projected before it is observed: an observed metric may
+    not hold an IN/EXISTS subquery, and a constant WHERE folded into the
+    filter above would drop the observation from the plan."""
+    from pyspark.sql import functions as F
+
+    return df.withColumn(_MATCH, F.coalesce(match, F.lit(False))).observe(
+        obs, F.count(F.when(F.col(_MATCH), 1)).alias("rows")
+    )
+
+
 def insert_into(df: DataFrame, table_dir: str, codec: str | None = None,
-                lock_timeout: float = 60.0) -> None:
-    """INSERT: append-only new files — no existing file is touched
+                lock_timeout: float = 60.0, notnull: list[str] = (),
+                stmt: str = "INSERT", _before_commit=None) -> int:
+    """INSERT / LOAD: returns the number of rows inserted
     (≅ cpimport incremental load / ha_calpont_impl_write_row_).
 
-    Takes the table lock for the append: an unlocked insert could
-    resolve the live symlink, write its part files into the OUTGOING
-    version directory while a committer is between token validation
-    and swap, and have them rmtree'd by the committer's GC — both
-    statements "succeed" and the inserted rows vanish.  Under the lock
-    an insert lands either before a committer's validation (token
-    mismatch → the rewrite rebases over it) or after its swap (files
-    land in the new live version).  A hive-partitioned table's append
-    keeps the layout (_hive_partition_cols) — a flat append would
-    break partition discovery on every subsequent read."""
-    with _table_lock_wait(table_dir, "INSERT", lock_timeout):
+    The rows are written ONCE into a pending version directory, pinned
+    before its first byte lands so a crashed insert is collected by the
+    next writer's orphan sweep.  NOT NULL columns are checked on those
+    staged files (MySQL rejects the whole statement, so nothing becomes
+    visible on error, and the source query never runs twice).  Then,
+    under the commit lock, every file of the then-live version is
+    hard-linked in and the pointer swapped — no existing file is
+    rewritten and the pre-image version is left untouched.  A
+    hive-partitioned table is staged with its layout
+    (_hive_partition_cols) so the link-in lands in the right ``col=value``
+    dirs.  ``_before_commit`` is a test hook run after staging, before
+    the commit lock."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    new_dir = _new_version_dir(table_dir)
+    pin = _pin_version(table_dir, os.path.basename(new_dir))
+    try:
         cols = [c for c in _hive_partition_cols(table_dir) if c in df.columns]
-        managed_writer(df, "append", codec, cols or None).parquet(table_dir)
+        obs = Observation()
+        counted = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        managed_writer(counted, "overwrite", codec, cols or None).parquet(new_dir)
+        n = obs.get["rows"]
+        if notnull and n:
+            pred = " OR ".join(f"`{c}` IS NULL" for c in notnull)
+            bad = df.sparkSession.read.parquet(new_dir).filter(pred).count()
+            if bad:
+                raise ValueError(
+                    f"{stmt} into {os.path.basename(table_dir.rstrip('/'))!r}: "
+                    f"{bad} row(s) violate NOT NULL ({', '.join(notnull)})"
+                )
+        if _before_commit is not None:
+            _before_commit()
+        with _table_lock_wait(table_dir, stmt, lock_timeout):
+            live = os.path.basename(os.path.realpath(table_dir.rstrip("/")))
+            _link_live_files(table_dir, new_dir)
+            _chain_append(table_dir, live, os.path.basename(new_dir))
+            _swap(table_dir, new_dir)
+            new_dir = None
+            # unpin under the lock: the pending version is live now, and
+            # a later insert's _chain_append must never see this pin
+            _unpin(pin)
+            _sweep_orphan_versions(table_dir)
+        return n
+    finally:
+        if new_dir:
+            shutil.rmtree(new_dir, ignore_errors=True)
+        _unpin(pin)
 
 
 def assign_auto_increment(df: DataFrame, col: str, start: int) -> DataFrame:
@@ -509,29 +594,27 @@ def _rewrite_writer(df: DataFrame, codec: str | None,
 
 
 def _apply_assignments(
-    df: DataFrame, cond: Column, assignments: dict[str, Column]
+    df: DataFrame, assignments: dict[str, Column]
 ) -> DataFrame:
-    """THE UPDATE SET application, shared by every variant (full, join,
-    pruned, optimistic) so the semantics can never drift: pin the WHERE
-    verdict against the ORIGINAL row before any assignment (MySQL
-    evaluates the predicate pre-SET, so a SET that writes a column the
-    WHERE references must not change which rows later assignments
-    touch; SET exprs still see updated values left-to-right, as MySQL
-    does), and keep each column's declared type (MySQL: SET casts to
-    the column type — essential for pruned rewrites, where hard-linked
-    files retain the old type and a type-changing SET would split the
-    table schema)."""
+    """THE UPDATE SET application over a ``_observe_match`` frame,
+    shared by the single- and multi-table UPDATE so the semantics can
+    never drift: the WHERE verdict is pinned against the ORIGINAL row
+    before any assignment (MySQL evaluates the predicate pre-SET, so a
+    SET that writes a column the WHERE references must not change which
+    rows later assignments touch; SET exprs still see updated values
+    left-to-right, as MySQL does), and each column keeps its declared
+    type (MySQL: SET casts to the column type, so a type-changing SET
+    never changes the table schema)."""
     from pyspark.sql import functions as F
 
-    match = "__idb_upd_match__"
-    out = df.withColumn(match, F.coalesce(cond, F.lit(False)))
     dtypes = {f.name: f.dataType for f in df.schema.fields}
+    out = df
     for col_name, expr in assignments.items():
         out = out.withColumn(
             col_name,
-            F.when(F.col(match), expr).otherwise(F.col(col_name)).cast(dtypes[col_name]),
+            F.when(F.col(_MATCH), expr).otherwise(F.col(col_name)).cast(dtypes[col_name]),
         )
-    return out.drop(match)
+    return out.drop(_MATCH)
 
 
 def update_table(
@@ -540,26 +623,50 @@ def update_table(
     condition: Column,
     assignments: dict[str, Column],
     codec: str | None = None,
+    **commit_opts,
 ) -> int:
     """UPDATE <table> SET <assignments> WHERE <condition>.
 
     Returns the number of rows updated.  Copy-on-write: the SELECT
     locates rows (the reference's internal UPDATE-as-SELECT), the
     rewrite applies SET to matching rows and passes others through.
+    Concurrent writers on DISJOINT rows of one table all commit (the
+    reference's version-buffer admission); true row overlap aborts the
+    later committer.  ``commit_opts`` (max_retries, lock_timeout,
+    _before_commit) go to _optimistic_rewrite."""
+
+    def build(df: DataFrame, obs) -> DataFrame:
+        return _apply_assignments(_observe_match(df, condition, obs), assignments)
+
+    return _optimistic_rewrite(
+        spark, table_dir, "UPDATE", build, lambda d: d.filter(condition),
+        codec, **commit_opts,
+    )
+
+
+def delete_from(
+    spark: SparkSession,
+    table_dir: str,
+    condition: Column,
+    codec: str | None = None,
+    **commit_opts,
+) -> int:
+    """DELETE FROM <table> WHERE <condition>; returns rows deleted.
+
+    SQL DELETE removes rows where the WHERE is TRUE — rows where it
+    evaluates NULL are KEPT (three-valued logic), so the keep-filter is
+    `NOT coalesce(cond, FALSE)`, not `NOT cond` (which would silently
+    drop NULL-condition rows).  Same commit protocol as update_table.
     """
     from pyspark.sql import functions as F
 
-    from infinidb_spark.operators.partitions import carry_disabled
+    def build(df: DataFrame, obs) -> DataFrame:
+        return _observe_match(df, condition, obs).filter(~F.col(_MATCH)).drop(_MATCH)
 
-    with _table_lock(table_dir, "UPDATE"):
-        df = read_table(spark, table_dir)
-        n = df.filter(condition).count()
-        updated = _apply_assignments(df, condition, assignments)
-        new_dir = _new_version_dir(table_dir)
-        _rewrite_writer(updated, codec, table_dir).parquet(new_dir)
-        carry_disabled(table_dir, new_dir)
-        _swap(table_dir, new_dir)
-    return n
+    return _optimistic_rewrite(
+        spark, table_dir, "DELETE", build, lambda d: d.filter(condition),
+        codec, **commit_opts,
+    )
 
 
 def _join_qualified(
@@ -648,6 +755,18 @@ def _join_qualified(
     return joined, F.coalesce(F.col("_idb_qual"), F.lit(False))
 
 
+def _join_selector(other, target_key, other_key, where, join_type):
+    """Row selector for multi-table DML: the target rows a statement
+    writes, by the same existential match the rewrite uses."""
+    def select(df: DataFrame) -> DataFrame:
+        joined, matched = _join_qualified(
+            df, other, target_key, other_key, where, join_type
+        )
+        return joined.filter(matched)
+
+    return select
+
+
 def update_table_join(
     spark: SparkSession,
     table_dir: str,
@@ -658,6 +777,7 @@ def update_table_join(
     where: Column | None = None,
     codec: str | None = None,
     join_type: str = "inner",
+    **commit_opts,
 ) -> int:
     """Multi-table UPDATE (``UPDATE t [LEFT] JOIN o ON t.k = o.k SET
     ...``) — the reference's SQLCOM_UPDATE_MULTI surface
@@ -673,28 +793,22 @@ def update_table_join(
     A row qualifies when ANY matching joined row satisfies the WHERE
     (existential, MySQL's per-pair evaluation — see _join_qualified);
     SET values come from the least qualifying joined row.
-    Returns the qualifying-row count; copy-on-write swap."""
+    Returns the qualifying-row count; same commit protocol as
+    update_table."""
     from pyspark.sql import functions as F
 
-    from infinidb_spark.operators.partitions import carry_disabled
-
-    with _table_lock(table_dir, "UPDATE"):
-        df = read_table(spark, table_dir)
+    def build(df: DataFrame, obs) -> DataFrame:
         joined, matched = _join_qualified(
             df, other, target_key, other_key, where, join_type
         )
-        n = joined.filter(matched).count()
-        # matched is a MATERIALIZED coalesced column of the joined
-        # relation, so the shared pin inside _apply_assignments is a
-        # no-op re-pin — used anyway so all four UPDATE variants share
-        # one SET application
-        out = _apply_assignments(joined, matched, assignments)
-        out = out.select(*[F.col(c) for c in df.columns])
-        new_dir = _new_version_dir(table_dir)
-        _rewrite_writer(out, codec, table_dir).parquet(new_dir)
-        carry_disabled(table_dir, new_dir)
-        _swap(table_dir, new_dir)
-    return n
+        out = _apply_assignments(_observe_match(joined, matched, obs), assignments)
+        return out.select(*[F.col(c) for c in df.columns])
+
+    return _optimistic_rewrite(
+        spark, table_dir, "UPDATE", build,
+        _join_selector(other, target_key, other_key, where, join_type),
+        codec, **commit_opts,
+    )
 
 
 def delete_from_join(
@@ -706,6 +820,7 @@ def delete_from_join(
     where: Column | None = None,
     codec: str | None = None,
     join_type: str = "inner",
+    **commit_opts,
 ) -> int:
     """Multi-table DELETE (``DELETE t FROM t [LEFT] JOIN o ON ...
     [WHERE]``) — SQLCOM_DELETE_MULTI analog.  ``'inner'``: join-matched
@@ -716,129 +831,18 @@ def delete_from_join(
     the WHERE (existential — see _join_qualified)."""
     from pyspark.sql import functions as F
 
-    from infinidb_spark.operators.partitions import carry_disabled
-
-    with _table_lock(table_dir, "DELETE"):
-        df = read_table(spark, table_dir)
+    def build(df: DataFrame, obs) -> DataFrame:
         joined, matched = _join_qualified(
             df, other, target_key, other_key, where, join_type
         )
-        n = joined.filter(matched).count()
-        out = joined.filter(~matched).select(*[F.col(c) for c in df.columns])
-        new_dir = _new_version_dir(table_dir)
-        _rewrite_writer(out, codec, table_dir).parquet(new_dir)
-        carry_disabled(table_dir, new_dir)
-        _swap(table_dir, new_dir)
-    return n
+        kept = _observe_match(joined, matched, obs).filter(~F.col(_MATCH))
+        return kept.select(*[F.col(c) for c in df.columns])
 
-
-def _pruned_rewrite(
-    spark: SparkSession,
-    table_dir: str,
-    predicates: list,
-    transform,
-    codec: str | None = None,
-) -> int:
-    """Shared engine for manifest-pruned UPDATE/DELETE.
-
-    The reference's version buffer rewrites only the 8 KB blocks a DML
-    touches (`versioning/BRM/vss.h:180`); the file-granularity analog:
-    extent-eliminate the table's files against the WHERE (sources/
-    manifest.py), rewrite only survivors, and HARD-LINK every other
-    file into the new version directory — zero data movement for the
-    untouched span, still one atomic swap.  At 100 TB with clustered
-    layout (sources/layout.py) a key-ranged DML rewrites O(matching
-    files), not the table.
-
-    ``transform(df, cond) -> (new_df, affected_count)`` applies the
-    operation to the scanned survivors.
-    """
-    from functools import reduce
-
-    from infinidb_spark.sources.manifest import _as_filter, build_manifest, prune
-
-    if not predicates:
-        raise ValueError(
-            "pruned DML needs at least one predicate — for a full-table "
-            "rewrite use update_table/delete_from"
-        )
-    from infinidb_spark.operators.partitions import carry_disabled, disabled_partitions
-
-    cond = reduce(lambda a, b: a & b, (_as_filter(p) for p in predicates))
-    with _table_lock(table_dir, "DML"):
-        # EVERYTHING version-dependent — realpath resolution, layout
-        # check, disabled set, manifest, pruning — runs UNDER the lock:
-        # a rewrite committed between an unlocked snapshot and the lock
-        # acquisition would otherwise have its files hard-linked from
-        # the OUTGOING version (silently reverting it, or crashing on
-        # the GC'd paths).  update_table resolves under the lock for
-        # the same reason.
-        real = os.path.realpath(table_dir.rstrip("/"))
-        if any(
-            os.path.isdir(os.path.join(real, f))
-            for f in os.listdir(real)
-            if not f.startswith(("_", "."))
-        ):
-            raise ValueError(
-                "pruned DML supports flat table layouts only — for a "
-                "partitioned table, filter on the partition column instead "
-                "(Spark prunes those directories natively)"
-            )
-        off = disabled_partitions(table_dir)
-        manifest = [
-            e for e in build_manifest(real) if os.path.basename(e["file"]) not in off
-        ]
-        if not manifest and not off:
-            return 0
-        touched = set(prune(manifest, predicates))
-        new_dir = _new_version_dir(table_dir)
-        os.makedirs(new_dir)
-        for entry in manifest:
-            if entry["file"] not in touched:
-                os.link(entry["file"], os.path.join(new_dir, os.path.basename(entry["file"])))
-        n = 0
-        if touched:
-            df = spark.read.option("mergeSchema", "true").parquet(*sorted(touched))
-            new_df, n = transform(df, cond)
-            # append alongside the hard links — part-file names are unique
-            managed_writer(new_df, "append", codec).parquet(new_dir)
-        carry_disabled(table_dir, new_dir)
-        _swap(table_dir, new_dir)
-    return n
-
-
-def update_table_pruned(
-    spark: SparkSession,
-    table_dir: str,
-    predicates: list,
-    assignments: dict[str, Column],
-    codec: str | None = None,
-) -> int:
-    """UPDATE rewriting only files whose min/max can match the WHERE
-    (predicate-tuple form, sources/manifest.py); others hard-linked."""
-    from pyspark.sql import functions as F
-
-    def transform(df: DataFrame, cond: Column):
-        n = df.filter(cond).count()
-        return _apply_assignments(df, cond, assignments), n
-
-    return _pruned_rewrite(spark, table_dir, predicates, transform, codec)
-
-
-def delete_from_pruned(
-    spark: SparkSession, table_dir: str, predicates: list,
-    codec: str | None = None,
-) -> int:
-    """DELETE rewriting only files whose min/max can match the WHERE;
-    NULL-condition rows kept (same three-valued rule as delete_from)."""
-    from pyspark.sql import functions as F
-
-    def transform(df: DataFrame, cond: Column):
-        cond_true = F.coalesce(cond, F.lit(False))
-        n = df.filter(cond_true).count()
-        return df.filter(~cond_true), n
-
-    return _pruned_rewrite(spark, table_dir, predicates, transform, codec)
+    return _optimistic_rewrite(
+        spark, table_dir, "DELETE", build,
+        _join_selector(other, target_key, other_key, where, join_type),
+        codec, **commit_opts,
+    )
 
 
 def read_table(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -895,7 +899,7 @@ def alter_table(
     # the DataFrame is created) — runs UNDER the lock: an unlocked plan
     # racing a concurrent committed UPDATE would hard-link / re-read
     # the outgoing version and silently revert it (or crash on GC'd
-    # paths).  update_table resolves under the lock for the same reason.
+    # paths).  Row writers pin their snapshot for the same reason.
     with _table_lock(table_dir, "ALTER"):
         real = os.path.realpath(table_dir.rstrip("/"))
         if disabled_partitions(table_dir):
@@ -981,36 +985,7 @@ def rename_table(table_dir: str, new_dir: str) -> None:
                 os.rename(src + suffix, dst + suffix)
 
 
-def delete_from(
-    spark: SparkSession,
-    table_dir: str,
-    condition: Column,
-    codec: str | None = None,
-) -> int:
-    """DELETE FROM <table> WHERE <condition>; returns rows deleted.
-
-    SQL DELETE removes rows where the WHERE is TRUE — rows where it
-    evaluates NULL are KEPT (three-valued logic), so the keep-filter is
-    `NOT coalesce(cond, FALSE)`, not `NOT cond` (which would silently
-    drop NULL-condition rows).
-    """
-    from pyspark.sql import functions as F
-
-    from infinidb_spark.operators.partitions import carry_disabled
-
-    with _table_lock(table_dir, "DELETE"):
-        df = read_table(spark, table_dir)
-        cond_true = F.coalesce(condition, F.lit(False))
-        n = df.filter(cond_true).count()
-        kept = df.filter(~cond_true)
-        new_dir = _new_version_dir(table_dir)
-        _rewrite_writer(kept, codec, table_dir).parquet(new_dir)
-        carry_disabled(table_dir, new_dir)
-        _swap(table_dir, new_dir)
-    return n
-
-
-# --- optimistic concurrent writers ------------------------------------
+# --- the commit protocol -----------------------------------------------
 # The reference's version buffer admits concurrent writers with
 # snapshot readers (`versioning/BRM/vss.h:180-210`: a block entering
 # the VB records its verID; a second writer hitting a VB-resident block
@@ -1020,7 +995,7 @@ def delete_from(
 # distributed work runs concurrently for any number of writers); the
 # table lock is taken only for a short commit-time validate+swap.  If
 # another writer committed in between, the row-level diff between the
-# two snapshots decides: disjoint from our WHERE -> rebase (re-execute
+# two snapshots decides: disjoint from our rows -> rebase (re-execute
 # on the new snapshot, i.e. serialize after the winner), true row
 # overlap -> first-committer-wins abort, exactly the VSS write-write
 # conflict.  Pins keep a snapshot's files readable under concurrent
@@ -1039,16 +1014,13 @@ def _pins_dir(table_dir: str) -> str:
 
 def _pin_version(table_dir: str, version_basename: str) -> str:
     """Additive per-writer pin file — no read-modify-write race between
-    concurrent pinners (unlike the shared retain JSON)."""
+    concurrent pinners (unlike the shared retain JSON).  Published
+    atomically: a sweeper reading a HALF-written pin would treat the
+    file as absent and collect the version it protects."""
     d = _pins_dir(table_dir)
     os.makedirs(d, exist_ok=True)
     p = os.path.join(d, uuid.uuid4().hex[:12] + ".json")
-    # atomic publish: a sweeper reading a HALF-written pin would treat
-    # the file as absent and collect the version it protects
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"version": version_basename, "pid": os.getpid()}, fh)
-    os.replace(tmp, p)
+    _write_json_atomic(p, {"version": version_basename, "pid": os.getpid()})
     return p
 
 
@@ -1057,6 +1029,39 @@ def _unpin(pin_path: str) -> None:
         os.remove(pin_path)
     except FileNotFoundError:
         pass
+
+
+def _pin_chain(rec: dict) -> list[str]:
+    """A pin's versions: the pinned snapshot, then every version an
+    INSERT built from it by appending rows (see _chain_append)."""
+    return [rec.get("version"), *rec.get("appended", [])]
+
+
+def _read_pin(p: str) -> dict | None:
+    try:
+        with open(p) as fh:
+            return json.load(fh)
+    except (OSError, json.JSONDecodeError):
+        return None
+
+
+def _chain_append(table_dir: str, live: str, new_version: str) -> None:
+    """An INSERT's version is ``live`` plus new rows, so to a writer
+    whose snapshot is ``live`` those rows are phantoms, never a write-
+    write conflict.  Chain ``new_version`` onto every pin whose newest
+    version is ``live``: the chained version stays alive with the pin
+    and is the base that writer diffs a later winner against.  Runs
+    under the commit lock; pins are only removed under it too
+    (_optimistic_rewrite's GC step), so no pin is re-created here."""
+    d = _pins_dir(table_dir)
+    if not os.path.isdir(d):
+        return
+    for f in os.listdir(d):
+        p = os.path.join(d, f)
+        rec = _read_pin(p) if f.endswith(".json") else None
+        if rec is not None and _pin_chain(rec)[-1] == live:
+            rec["appended"] = _pin_chain(rec)[1:] + [new_version]
+            _write_json_atomic(p, rec)
 
 
 def _pinned_versions(table_dir: str) -> set[str]:
@@ -1069,10 +1074,8 @@ def _pinned_versions(table_dir: str) -> set[str]:
     out: set[str] = set()
     for f in os.listdir(d):
         p = os.path.join(d, f)
-        try:
-            with open(p) as fh:
-                rec = json.load(fh)
-        except (OSError, json.JSONDecodeError):
+        rec = _read_pin(p)
+        if rec is None:
             continue
         pid = rec.get("pid")
         alive = True
@@ -1084,122 +1087,48 @@ def _pinned_versions(table_dir: str) -> set[str]:
             except PermissionError:
                 pass
         if alive:
-            out.add(rec.get("version"))
+            out.update(_pin_chain(rec))
         else:
             _unpin(p)
     return out
-
-
-#: directory-identity memo for _snapshot: {dir: (dir mtime_ns,
-#: {filename: (size, mtime_ns)}, [subdir names])}.  LRU-bounded.
-_SNAP_CACHE: "OrderedDict[str, tuple[int, dict[str, tuple[int, int]], list[str]]]" = (
-    OrderedDict()
-)
-_SNAP_CACHE_MAX = 8192
-#: "racily clean" guard (the make/git idiom): a directory whose mtime
-#: is within this window of now is never trusted from cache NOR cached
-#: — a writer landing in the same timestamp tick after our scan would
-#: otherwise alias.  Quiescent directories (the historical bulk of a
-#: large table) are exactly the ones that hit the memo.  2 s, not a few
-#: hundred ms: the window must exceed the FILESYSTEM's mtime
-#: granularity (1 s on coarse filesystems; git's racily-clean rule
-#: sizes to the same bound), else a writer landing in the same
-#: truncated-mtime tick after the window closes would alias.
-_SNAP_RACY_NS = 2_000_000_000
-
-
-def _scan_dir(d: str) -> tuple[dict[str, tuple[int, int]], list[str], bool]:
-    """One directory's (file identities, subdir names, listing-complete)
-    — os.walk parity: dot-dirs skipped, symlinked dirs listed-but-not-
-    descended, file stats follow symlinks.  ``complete=False`` means
-    the scandir itself failed (EMFILE/EACCES/...): the caller must NOT
-    memoize the empty listing, or a transient error would poison the
-    snapshot identity until the dir mtime next changes."""
-    files: dict[str, tuple[int, int]] = {}
-    subdirs: list[str] = []
-    try:
-        with os.scandir(d) as it:
-            for de in it:
-                try:
-                    if de.is_dir(follow_symlinks=False):
-                        if not de.name.startswith("."):
-                            subdirs.append(de.name)
-                    elif de.is_dir(follow_symlinks=True):
-                        continue  # symlink to dir: os.walk doesn't recurse
-                    else:
-                        st = de.stat()
-                        files[de.name] = (st.st_size, st.st_mtime_ns)
-                except OSError:
-                    continue
-    except OSError:
-        return files, sorted(subdirs), False
-    return files, sorted(subdirs), True
 
 
 def _snapshot(table_dir: str) -> tuple[str, str, dict[str, tuple[int, int]]]:
     """(resolved version dir, content token, per-file identity map).
 
     The token hashes the file SET (relative names + sizes + mtimes),
-    not just the version basename: a concurrent INSERT appends files
+    not just the version basename: the streaming sink links epoch files
     into the SAME version directory, so basename equality alone would
-    let a rewrite silently drop freshly-inserted rows.  mtime_ns in the
-    identity guards the pathological same-name-same-size rewrite.
+    let a rewrite silently drop freshly-linked rows.  mtime_ns in the
+    identity guards the pathological same-name-same-size rewrite,
+    including an in-place edit by an external tool.
 
     The conflict path diffs two identity maps ``{relpath: (size,
     mtime_ns)}`` so it reads only CHANGED files, never the whole
-    table.
-
-    Cost: O(directories) stat + O(changed-directory files) scandir per
-    statement, NOT O(files) — each directory's listing is memoized
-    against its mtime (every writer here creates/renames/unlinks
-    entries, which bumps the parent mtime; nothing writes parquet in
-    place).  The reference keeps its extent map memory-resident for the
-    same reason (``versioning/BRM/extentmap.h:116``): snapshot identity
-    must be consultable per-statement without touching the extents.
-    Directories modified within ``_SNAP_RACY_NS`` of now are rescanned
-    unconditionally, so a concurrent writer in the same timestamp tick
-    can never alias a stale listing.
-
-    LIMIT: the memo keys on the PARENT directory's mtime, which an
-    in-place rewrite of an existing file (open + truncate on the same
-    name) does NOT bump — such an external edit is invisible to
-    conflict detection until something creates/renames/unlinks in that
-    directory.  No writer in this
-    engine modifies parquet in place, so the blind spot only matters
-    for table dirs also written by EXTERNAL tools; for those, set
-    ``INFINIDB_SPARK_SNAPSHOT_NO_MEMO=1`` to stat every file on every
-    snapshot (the pre-memo O(files) behavior)."""
+    table.  Cost: one scandir per directory and one stat per file —
+    hidden (dot) directories skipped, symlinked directories not
+    descended."""
     real = os.path.realpath(table_dir.rstrip("/"))
-    no_memo = os.environ.get("INFINIDB_SPARK_SNAPSHOT_NO_MEMO", "") not in ("", "0")
     entries: dict[str, tuple[int, int]] = {}
-    now = time.time_ns()
-    stack = [real]
+    stack = [""]  # directories relative to ``real``
     while stack:
-        d = stack.pop()
+        rel = stack.pop()
         try:
-            dmt = os.stat(d).st_mtime_ns
+            with os.scandir(os.path.join(real, rel)) as it:
+                listing = list(it)
         except OSError:
             continue
-        hit = None if no_memo else _SNAP_CACHE.get(d)
-        if hit is not None and hit[0] == dmt and now - dmt > _SNAP_RACY_NS:
-            _, files, subdirs = hit
-            _SNAP_CACHE.move_to_end(d)
-        else:
-            files, subdirs, complete = _scan_dir(d)
-            if complete and now - dmt > _SNAP_RACY_NS:
-                _SNAP_CACHE[d] = (dmt, files, subdirs)
-                _SNAP_CACHE.move_to_end(d)
-                while len(_SNAP_CACHE) > _SNAP_CACHE_MAX:
-                    _SNAP_CACHE.popitem(last=False)
-            else:
-                # racy window OR a failed listing: never memoize —
-                # a transient EMFILE/EACCES must self-heal next call
-                _SNAP_CACHE.pop(d, None)
-        rel_base = os.path.relpath(d, real)
-        for name, key in files.items():
-            rel = name if rel_base == "." else os.path.join(rel_base, name)
-            entries[rel] = key
-        stack.extend(os.path.join(d, s) for s in subdirs)
+        for de in listing:
+            name = os.path.join(rel, de.name) if rel else de.name
+            try:
+                if de.is_dir():
+                    if not de.is_symlink() and not de.name.startswith("."):
+                        stack.append(name)
+                    continue
+                st = de.stat()
+            except OSError:
+                continue
+            entries[name] = (st.st_size, st.st_mtime_ns)
     token = hashlib.sha256(
         json.dumps([os.path.basename(real), sorted(entries.items())]).encode()
     ).hexdigest()
@@ -1237,10 +1166,10 @@ def _overlap_on_changed_files(
     old_entries: dict[str, tuple[int, int]],
     cur_dir: str,
     cur_entries: dict[str, tuple[int, int]],
-    cond_true: Column,
-) -> int | None:
-    """Write-write overlap probe reading ONLY the files that differ
-    between two pinned versions, or None to force the full-table diff.
+    select,
+) -> int:
+    """Write-write overlap probe: > 0 when a row the winner removed or
+    wrote is one this statement writes (``select(df)`` → those rows).
 
     The reference's version buffer tracks CHANGED blocks, never the
     whole table (`versioning/BRM/vss.h:180-210`); the analog here is
@@ -1248,40 +1177,41 @@ def _overlap_on_changed_files(
     (relpath, size, mtime) files, old = shared ⊎ removed and
     cur = shared ⊎ added, so old ∖ cur = removed ∖ added — the
     exceptAll only ever needs the differing files.  Hard-linked
-    carries (metadata-only ALTER, caldroppartitions survivors) share
-    identity and drop out for free.
+    carries (INSERT link-ins, metadata-only ALTER, caldroppartitions
+    survivors) share identity and drop out for free.
 
-    Falls back (None) when either version has out-of-service
-    partitions: read_table excludes those files at plan time, and the
-    exclusion must hold in the diff too — rare admin state, so the
-    conservative full read is fine."""
+    When either version has out-of-service partitions the diff reads
+    both versions whole: read_table excludes those files at plan time,
+    and the exclusion must hold in the diff too — rare admin state, so
+    the conservative full read is fine."""
     from infinidb_spark.operators.partitions import disabled_partitions
 
+    def probe(df: DataFrame) -> int:
+        return select(df).limit(1).count()
+
     if disabled_partitions(snap_dir) or disabled_partitions(cur_dir):
-        return None
-    old_data = _data_file_ids(old_entries)
-    cur_data = _data_file_ids(cur_entries)
-    removed = sorted(r for r, k in old_data.items() if cur_data.get(r) != k)
-    added = sorted(r for r, k in cur_data.items() if old_data.get(r) != k)
-    if not removed and not added:
-        return 0
-    if not removed:
-        return _read_files(spark, cur_dir, added).filter(cond_true).limit(1).count()
-    if not added:
-        return _read_files(spark, snap_dir, removed).filter(cond_true).limit(1).count()
-    old_diff = _read_files(spark, snap_dir, removed)
-    cur_diff = _read_files(spark, cur_dir, added)
-    return (
-        old_diff.exceptAll(cur_diff).filter(cond_true).limit(1).count()
-        + cur_diff.exceptAll(old_diff).filter(cond_true).limit(1).count()
-    )
+        old_diff, cur_diff = read_table(spark, snap_dir), read_table(spark, cur_dir)
+    else:
+        old_data = _data_file_ids(old_entries)
+        cur_data = _data_file_ids(cur_entries)
+        removed = sorted(r for r, k in old_data.items() if cur_data.get(r) != k)
+        added = sorted(r for r, k in cur_data.items() if old_data.get(r) != k)
+        if not removed and not added:
+            return 0
+        if not removed:
+            return probe(_read_files(spark, cur_dir, added))
+        if not added:
+            return probe(_read_files(spark, snap_dir, removed))
+        old_diff = _read_files(spark, snap_dir, removed)
+        cur_diff = _read_files(spark, cur_dir, added)
+    return probe(old_diff.exceptAll(cur_diff)) + probe(cur_diff.exceptAll(old_diff))
 
 
 @contextmanager
 def _table_lock_wait(table_dir: str, op: str, timeout: float = 60.0,
                      poll: float = 0.05):
     """`_table_lock` that WAITS (bounded) instead of failing fast —
-    optimistic writers hold it only for commit-time validate+swap, so
+    row writers hold it only for commit-time validate+swap, so
     contention windows are milliseconds, not rewrite durations."""
     deadline = time.monotonic() + timeout
     while True:
@@ -1303,30 +1233,23 @@ def _table_lock_wait(table_dir: str, op: str, timeout: float = 60.0,
         return
 
 
-def _read_version(spark: SparkSession, version_dir: str) -> DataFrame:
-    """read_table against a PINNED version directory (the out-of-service
-    sidecar lives inside the version dir, so exclusion semantics hold —
-    read_table takes any directory, and delegating keeps the optimistic
-    snapshot read from ever diverging from the normal read path)."""
-    return read_table(spark, version_dir)
-
-
 def _sweep_orphan_versions(table_dir: str) -> None:
     """GC version dirs left by CRASHED writers (e.g. SIGKILL between
-    rewrite-build and commit) — the stale-lock recovery analog for
-    snapshots.  A version dir is an orphan when it is not the live
-    version, not retained by an open transaction, and not pinned by a
-    live-pid writer (`_pinned_versions` drops dead-pid pins first).
+    rewrite-build and commit) and versions nothing protects any more —
+    the stale-lock recovery analog for snapshots.  A version dir is an
+    orphan when it is not the live version, not retained by an open
+    transaction, and not pinned by a live-pid writer
+    (`_pinned_versions` drops dead-pid pins first).
 
-    Must run under the table lock: plain writers build their rewrite
-    UNDER that lock, and optimistic writers pin their in-flight version
-    dir BEFORE its first byte is written, so anything unpinned here is
-    garbage.  Ordering matters: version dirs are LISTED first and the
-    keep-set read AFTER — a concurrent optimistic writer pins (lock-
-    free) before creating its dir, so any dir the listing sees has its
-    pin visible to the later read; a keep-set snapshotted first could
-    go stale while this process is descheduled and collect a just-
-    pinned, mid-write directory."""
+    Must run under the table lock: DDL builds its new version UNDER
+    that lock, and row writers pin their in-flight version dir BEFORE
+    its first byte is written, so anything unpinned here is garbage.
+    Ordering matters: version dirs are LISTED first and the keep-set
+    read AFTER — a concurrent writer pins (lock-free) before creating
+    its dir, so any dir the listing sees has its pin visible to the
+    later read; a keep-set snapshotted first could go stale while this
+    process is descheduled and collect a just-pinned, mid-write
+    directory."""
     table_dir = table_dir.rstrip("/")
     parent = os.path.dirname(table_dir) or "."
     base = os.path.basename(table_dir)
@@ -1360,67 +1283,67 @@ def _optimistic_rewrite(
     spark: SparkSession,
     table_dir: str,
     op: str,
-    condition: Column,
-    transform,
+    build,
+    select,
     codec: str | None,
     max_retries: int = 3,
     lock_timeout: float = 60.0,
     _before_commit=None,
 ) -> int:
-    """Shared optimistic copy-on-write loop for UPDATE/DELETE.
+    """THE copy-on-write loop for UPDATE/DELETE, single- and
+    multi-table; returns the affected-row count.
 
-    ``transform(df, cond_true) -> rewritten df``.  ``_before_commit``
-    is a test hook invoked after the rewrite is built, before the
-    commit lock — the deterministic way to interleave a competing
-    committed write.
+    ``build(df, obs) -> rewritten df`` observes the affected rows on
+    ``obs`` (a fresh ``Observation`` per attempt), so the count comes
+    out of the write job itself.  ``select(df) -> rows this statement
+    writes`` drives the conflict probe.  ``_before_commit`` is a test
+    hook invoked after the rewrite is built, before the commit lock —
+    the deterministic way to interleave a competing committed write.
 
-    Conflict detection sees every create/rename/unlink any engine
-    writer performs; see the ``_snapshot`` LIMIT note for the one
-    external-writer pattern it cannot see (in-place file rewrites,
-    which bump no directory mtime) and the
-    ``INFINIDB_SPARK_SNAPSHOT_NO_MEMO`` escape hatch for
-    externally-managed table dirs."""
-    from pyspark.sql import functions as F
+    Conflict detection sees every create/rename/unlink/in-place edit
+    of a file (_snapshot stats every file)."""
+    from pyspark.sql import Observation
 
     from infinidb_spark.operators.partitions import carry_disabled
 
-    cond_true = F.coalesce(condition, F.lit(False))
+    parent = os.path.dirname(table_dir.rstrip("/")) or "."
     # pin under the lock: every version rmtree also runs under it, so a
     # snapshot can never vanish between resolve and pin
     with _table_lock_wait(table_dir, f"{op}-SNAPSHOT", lock_timeout):
         snap_dir, token, _ = _snapshot(table_dir)
-        pins = [_pin_version(table_dir, os.path.basename(snap_dir))]
-    old_dirs = [snap_dir]
+        snap_pin = _pin_version(table_dir, os.path.basename(snap_dir))
+    pins = [snap_pin]
     new_dir: str | None = None
     try:
         for attempt in range(max_retries + 1):
-            df = _read_version(spark, snap_dir)
-            n = df.filter(cond_true).count()
+            obs = Observation()
             new_dir = _new_version_dir(table_dir)
             # pin the in-flight version BEFORE its first byte lands:
             # _sweep_orphan_versions treats any unpinned non-live
             # version dir as crash debris
             pins.append(_pin_version(table_dir, os.path.basename(new_dir)))
-            _rewrite_writer(transform(df, cond_true), codec, table_dir).parquet(new_dir)
+            out = build(read_table(spark, snap_dir), obs)
+            _rewrite_writer(out, codec, table_dir).parquet(new_dir)
+            n = obs.get["rows"]
             carry_disabled(table_dir, new_dir)
             if _before_commit is not None:
                 hook, _before_commit = _before_commit, None
                 hook()
-            committed = False
             with _table_lock_wait(table_dir, op, lock_timeout):
                 cur_dir, cur_token, _ = _snapshot(table_dir)
                 if cur_token == token:
                     _swap(table_dir, new_dir)
-                    committed = True
-                else:
-                    # pin the winner's version UNDER the lock so its
-                    # files survive a third writer's swap-GC while we
-                    # diff against it
-                    pins.append(_pin_version(table_dir, os.path.basename(cur_dir)))
-                    old_dirs.append(cur_dir)
-            if committed:
-                new_dir = None
-                return n
+                    new_dir = None
+                    return n
+                # pin the winner's version UNDER the lock so its files
+                # survive a third writer's swap-GC while we diff
+                # against it; it is our snapshot if we rebase
+                cur_pin = _pin_version(table_dir, os.path.basename(cur_dir))
+                pins.append(cur_pin)
+                # INSERTs since our snapshot are chained onto its pin:
+                # diff from the newest of them, so their rows count as
+                # phantoms, not as the winner's writes
+                base_dir = os.path.join(parent, _pin_chain(_read_pin(snap_pin))[-1])
             shutil.rmtree(new_dir, ignore_errors=True)  # stale rewrite
             new_dir = None
             if attempt >= max_retries:
@@ -1430,35 +1353,28 @@ def _optimistic_rewrite(
                 )
             # row-level overlap vs the concurrently-committed state:
             # pre-images the winner removed/modified + post-images it
-            # wrote; any of them matching OUR predicate is a true
-            # write-write conflict -> first committer wins.  Reads only
-            # the CHANGED files (see _overlap_on_changed_files) — a
-            # conflict on an N-file table costs O(changed), not two
-            # full-table set differences.
-            if os.path.realpath(snap_dir) == os.path.realpath(cur_dir):
-                # same version dir: the winner only APPENDED (INSERT).
+            # wrote; any of them among OUR rows is a true write-write
+            # conflict -> first committer wins.  Reads only the CHANGED
+            # files (see _overlap_on_changed_files) — a conflict on an
+            # N-file table costs O(changed), not two full-table set
+            # differences.
+            if os.path.realpath(base_dir) == os.path.realpath(cur_dir):
+                # the winner only APPENDED (an INSERT chained onto our
+                # pin, or sink epoch files linked into our version).
                 # New rows are phantoms under snapshot isolation, never
                 # a write-write conflict — rebase over them.
                 overlap = 0
             else:
-                # re-walk BOTH dirs at diff time (matching the old
-                # full-table diff, which read them live): the PIN-time
-                # identity map can miss a file a concurrent INSERT
-                # appended into the snapshot dir after pinning — its
-                # rows would then show up only on the winner's side
-                # and abort what is really a rebase-able phantom
-                _, _, old_now = _snapshot(snap_dir)
+                # re-walk BOTH dirs at diff time: the PIN-time identity
+                # map can miss a file the streaming sink linked into
+                # the snapshot dir after pinning — its rows would then
+                # show up only on the winner's side and abort what is
+                # really a rebase-able phantom
+                _, _, old_now = _snapshot(base_dir)
                 _, _, cur_now = _snapshot(cur_dir)
                 overlap = _overlap_on_changed_files(
-                    spark, snap_dir, old_now, cur_dir, cur_now, cond_true
+                    spark, base_dir, old_now, cur_dir, cur_now, select
                 )
-                if overlap is None:  # out-of-service state: full diff
-                    old_df = _read_version(spark, snap_dir)
-                    cur_df = _read_version(spark, cur_dir)
-                    overlap = (
-                        old_df.exceptAll(cur_df).filter(cond_true).limit(1).count()
-                        + cur_df.exceptAll(old_df).filter(cond_true).limit(1).count()
-                    )
             if overlap:
                 raise ConcurrentWriteConflict(
                     f"{op} on {os.path.basename(table_dir.rstrip('/'))!r}: a "
@@ -1467,63 +1383,19 @@ def _optimistic_rewrite(
                 )
             # disjoint -> rebase: adopt the winner's snapshot and
             # re-execute, i.e. serialize this statement after it
-            snap_dir, token = cur_dir, cur_token
+            snap_dir, token, snap_pin = cur_dir, cur_token, cur_pin
         raise AssertionError("unreachable")
     finally:
         if new_dir:
             shutil.rmtree(new_dir, ignore_errors=True)
-        for p in pins:
-            _unpin(p)
         try:
-            # GC under the lock (see pin note above); best-effort — a
-            # skipped version is re-collected by the next writer's GC
+            # unpin and GC under the lock (see pin note above and
+            # _chain_append); best-effort — a version skipped here is
+            # collected by the next writer's sweep
             with _table_lock_wait(table_dir, "GC", timeout=5.0):
-                for d in old_dirs:
-                    _gc_version(table_dir, d)
+                for p in pins:
+                    _unpin(p)
                 _sweep_orphan_versions(table_dir)
         except RuntimeError:
-            pass
-
-
-def update_table_optimistic(
-    spark: SparkSession,
-    table_dir: str,
-    condition: Column,
-    assignments: dict[str, Column],
-    codec: str | None = None,
-    max_retries: int = 3,
-    lock_timeout: float = 60.0,
-    _before_commit=None,
-) -> int:
-    """UPDATE under snapshot isolation: concurrent writers on DISJOINT
-    rows of one table all commit (the reference's version-buffer
-    admission); true row overlap aborts the later committer."""
-    from pyspark.sql import functions as F
-
-    def transform(df: DataFrame, cond_true: Column) -> DataFrame:
-        return _apply_assignments(df, cond_true, assignments)
-
-    return _optimistic_rewrite(
-        spark, table_dir, "UPDATE", condition, transform, codec,
-        max_retries, lock_timeout, _before_commit,
-    )
-
-
-def delete_from_optimistic(
-    spark: SparkSession,
-    table_dir: str,
-    condition: Column,
-    codec: str | None = None,
-    max_retries: int = 3,
-    lock_timeout: float = 60.0,
-    _before_commit=None,
-) -> int:
-    """DELETE under snapshot isolation — see update_table_optimistic."""
-
-    def transform(df: DataFrame, cond_true: Column) -> DataFrame:
-        return df.filter(~cond_true)
-
-    return _optimistic_rewrite(
-        spark, table_dir, "DELETE", condition, transform, codec,
-        max_retries, lock_timeout, _before_commit,
-    )
+            for p in pins:
+                _unpin(p)

@@ -285,7 +285,7 @@ def char_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def concurrent_dml_disjoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concurrent same-table writers under snapshot isolation
-    (operators/dml.py update_table_optimistic ≅ the version buffer
+    (operators/dml.py update_table ≅ the version buffer
     admitting concurrent writers, `versioning/BRM/vss.h:180-210`).
 
     Two real threads UPDATE disjoint key ranges of ONE managed table;
@@ -295,10 +295,7 @@ def concurrent_dml_disjoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     in as ``conflict_aborted`` so the abort path can't silently rot."""
     import threading
 
-    from infinidb_spark.operators.dml import (
-        ConcurrentWriteConflict,
-        update_table_optimistic,
-    )
+    from infinidb_spark.operators.dml import ConcurrentWriteConflict
 
     customer = load_tables(spark, sf_dir, names=("customer",))["customer"]
     workdir = tempfile.mkdtemp(prefix="infinidb_ccdml_q_")
@@ -310,8 +307,7 @@ def concurrent_dml_disjoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def run(cond, assign):
             try:
-                update_table_optimistic(spark, table, cond, assign,
-                                        lock_timeout=300.0)
+                update_table(spark, table, cond, assign, lock_timeout=300.0)
             except Exception as e:  # pragma: no cover - failure surface
                 errs.append(e)
 
@@ -333,7 +329,7 @@ def concurrent_dml_disjoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         create_table(nation, probe_t)
         aborted = 0
         try:
-            update_table_optimistic(
+            update_table(
                 spark, probe_t,
                 F.col("n_regionkey") < 2, {"n_nationkey": F.lit(0)},
                 _before_commit=lambda: update_table(

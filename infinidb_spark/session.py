@@ -407,77 +407,6 @@ class InfiniSession:
         self._refresh(name)
         return path
 
-    def _insert_staged(
-        self, name: str, path: str, aligned, notnull: list[str],
-        codec: str | None = None,
-    ) -> int:
-        """INSERT into a table with NOT NULL columns: write once to a
-        staging dir, validate nulls against the STAGED parquet (cheap
-        re-scan, never a second run of the source query), then hard-link
-        the part files into the table — MySQL rejects the whole
-        statement on a NOT NULL violation, so nothing lands on error."""
-        import shutil
-        import tempfile
-        import uuid
-
-        # stage INSIDE the managed root (sibling dot-directory, like the
-        # streaming sink) so the link below is same-filesystem; a
-        # cross-device TMPDIR would make os.link raise EXDEV
-        stage = tempfile.mkdtemp(
-            prefix=".stage_", dir=os.path.dirname(path) or None
-        )
-        try:
-            from infinidb_spark.operators.dml import (
-                _hive_partition_cols,
-                managed_writer,
-            )
-
-            # the shared chokepoint applies char-null semantics BEFORE
-            # the NOT NULL check below, so '' into a NOT NULL string
-            # column is rejected (it would be stored as NULL).  A
-            # hive-partitioned table stages WITH its layout so the
-            # link-in below lands files in the right col=value dirs —
-            # a flat link-in would break partition discovery.
-            pcols = [
-                c for c in _hive_partition_cols(path) if c in aligned.columns
-            ]
-            managed_writer(aligned, "overwrite", codec, pcols or None).parquet(stage)
-            staged = self.spark.read.parquet(stage)
-            pred = " OR ".join(f"`{c}` IS NULL" for c in notnull)
-            bad = staged.filter(pred).count()
-            if bad:
-                raise ValueError(
-                    f"INSERT into {name!r}: {bad} row(s) violate NOT NULL "
-                    f"({', '.join(notnull)})"
-                )
-            n = staged.count()
-            # link-in under the table lock, mirroring insert_into: an
-            # unlocked link could land files in an OUTGOING version dir
-            # between an optimistic committer's token validation and
-            # swap, and have them rmtree'd by its GC — both statements
-            # "succeed" and the inserted rows vanish
-            from infinidb_spark.operators.dml import _table_lock_wait
-
-            with _table_lock_wait(path, "INSERT"):
-                # walk, not listdir: a partitioned stage nests part
-                # files under col=value/ dirs that must be mirrored
-                for root_, _dirs, files_ in os.walk(stage):
-                    rel = os.path.relpath(root_, stage)
-                    for f in files_:
-                        if not (f.startswith("part-") and f.endswith(".parquet")):
-                            continue
-                        ddir = path if rel == "." else os.path.join(path, rel)
-                        os.makedirs(ddir, exist_ok=True)
-                        dst = os.path.join(ddir, f"ins_{uuid.uuid4().hex[:12]}_{f}")
-                        src = os.path.join(root_, f)
-                        try:
-                            os.link(src, dst)
-                        except OSError:  # EXDEV or a no-hardlink filesystem
-                            shutil.move(src, dst)
-            return n
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
-
     def _fill_auto_increment(self, table: str, aligned):
         """AUTO_INCREMENT assignment for INSERT / LOAD DATA batches.
 
@@ -876,12 +805,6 @@ class InfiniSession:
             "Time long, State string, Info string",
         )
 
-    def _sysvar_on(self, name: str) -> bool:
-        """MySQL boolean sysvars are case-insensitive and accept
-        ON/TRUE/1 (sql/sys_vars handling of boolean SET values)."""
-        v = str(self._sysvars.get(name, "0")).strip().strip("'\"").upper()
-        return v in ("1", "ON", "TRUE", "YES")
-
     def _refresh(self, name: str) -> None:
         from infinidb_spark.operators.dml import read_table
 
@@ -974,15 +897,15 @@ class InfiniSession:
     # The reference is transactional through the version buffer: DML
     # pre-images stay in VSS/VBBM until commit/rollback
     # (`versioning/BRM/vss.h:180`, `dbcon/dmlpackage/dml.y:424` commit/
-    # rollback statements).  Analog here: the copy-on-write layout
-    # already keeps pre-image version directories; BEGIN pins them
-    # (metadata-only snapshot — version pointer + file listing, no data
-    # copy) and ROLLBACK re-points the symlink and drops appended files.
-    # Scope: this session's writes (single-writer, like the rest of the
-    # DML layer); DDL implicitly commits, exactly MySQL's rule.  A crash
-    # mid-transaction leaves the retain marker — the committed state is
-    # whatever the symlink points at (always consistent), recovery =
-    # release_retained, the calcleartablelock idiom.
+    # rollback statements).  Analog here: every row write builds a new
+    # version directory and swaps the table's pointer, so the pre-image
+    # version is never modified; BEGIN and SAVEPOINT retain it
+    # (metadata-only snapshot — a version name, no data copy) and
+    # ROLLBACK moves the pointer back.  DDL implicitly commits, exactly
+    # MySQL's rule.  A crash mid-transaction leaves the retain marker —
+    # the committed state is whatever the symlink points at (always
+    # consistent), recovery = release_retained, the calcleartablelock
+    # idiom.
 
     def begin(self) -> None:
         """START TRANSACTION; an open transaction implicitly commits
@@ -992,57 +915,36 @@ class InfiniSession:
         self._txn = {}
         self._savepoints = []
 
-    @staticmethod
-    def _snap_files(real: str) -> set[str]:
-        """Relative paths of every file under a version dir, nested
-        partition subdirs included — hive-partitioned writers append
-        part files INSIDE dt=X/ subdirs and may create new ones, both
-        of which a top-level listdir snapshot would miss (ROLLBACK
-        would then silently keep the rolled-back rows)."""
-        out: set[str] = set()
-        for dirpath, _dirs, files in os.walk(real):
-            rel = os.path.relpath(dirpath, real)
-            for f in files:
-                out.add(f if rel == "." else os.path.join(rel, f))
-        return out
+    def _retain_current(self, path: str) -> str:
+        """Retain a table's live version; returns its name."""
+        from infinidb_spark.operators.dml import retain_version
+
+        version = os.path.basename(os.path.realpath(path))
+        retain_version(path, version)
+        return version
 
     def _txn_touch(self, name: str, path: str) -> None:
         """Snapshot a table on its first DML inside the transaction."""
         if self._txn is None or name in self._txn:
             return
-        from infinidb_spark.operators.dml import retain_version
-
-        real = os.path.realpath(path)
-        retain_version(path, os.path.basename(real))
-        snap = {
-            "version": os.path.basename(real),
-            "files": self._snap_files(real),
-        }
-        self._txn[name] = snap
+        version = self._retain_current(path)
+        self._txn[name] = version
         # a savepoint set BEFORE this table was first touched restores
         # it to its touch-time (= savepoint-time) state
         for _, tables in self._savepoints:
-            tables.setdefault(name, dict(snap))
+            tables.setdefault(name, version)
 
     def savepoint(self, name: str) -> None:
-        """SAVEPOINT: pin every touched table's CURRENT version (an
+        """SAVEPOINT: retain every touched table's CURRENT version (an
         intermediate pre-image, same retain mechanism as BEGIN); a
         same-name savepoint replaces the old one (MySQL rule)."""
-        from infinidb_spark.operators.dml import retain_version
-
         if self._txn is None:
             raise RuntimeError("SAVEPOINT outside a transaction")
-        tables: dict[str, dict] = {}
-        for tname in self._txn:
-            path = self._managed.get(tname)
-            if path is None:
-                continue
-            real = os.path.realpath(path)
-            retain_version(path, os.path.basename(real))
-            tables[tname] = {
-                "version": os.path.basename(real),
-                "files": self._snap_files(real),
-            }
+        tables = {
+            tname: self._retain_current(self._managed[tname])
+            for tname in self._txn
+            if tname in self._managed
+        }
         self._savepoints = [sp for sp in self._savepoints if sp[0] != name]
         self._savepoints.append((name, tables))
 
@@ -1052,8 +954,8 @@ class InfiniSession:
         transaction stays open (MySQL semantics)."""
         for idx, (sp_name, tables) in enumerate(self._savepoints):
             if sp_name == name:
-                for tname, snap in tables.items():
-                    self._restore_snapshot(tname, snap)
+                for tname, version in tables.items():
+                    self._restore_version(tname, version)
                 del self._savepoints[idx + 1 :]
                 return
         raise KeyError(f"no such savepoint {name!r}")
@@ -1066,69 +968,58 @@ class InfiniSession:
         if len(self._savepoints) == before:
             raise KeyError(f"no such savepoint {name!r}")
 
-    def _restore_snapshot(self, tname: str, snap: dict) -> None:
-        from infinidb_spark.operators.dml import _swap
+    def _restore_version(self, tname: str, version: str) -> None:
+        """Point a table back at a retained version — one pointer swap
+        under the commit lock; the superseded version is GC'd unless
+        something still retains or pins it."""
+        from infinidb_spark.operators.dml import _swap, _table_lock_wait
 
         path = self._managed.get(tname)
         if path is None:
             return
-        want = os.path.join(os.path.dirname(path.rstrip("/")), snap["version"])
-        if os.path.basename(os.path.realpath(path)) != snap["version"]:
-            _swap(path, want)  # superseded unpinned versions GC'd
-        for f in self._snap_files(want) - snap["files"]:
-            fp = os.path.join(want, f)
-            if os.path.isfile(fp):
-                os.remove(fp)
-        # prune partition dirs emptied by the removal (a dt=Y/ created
-        # since the snapshot would otherwise break partition discovery)
-        for dirpath, _d, _f in os.walk(want, topdown=False):
-            if dirpath != want:
-                try:
-                    os.rmdir(dirpath)  # no-op unless empty
-                except OSError:
-                    pass
+        if os.path.basename(os.path.realpath(path)) != version:
+            with _table_lock_wait(path, "ROLLBACK"):
+                _swap(path, os.path.join(os.path.dirname(path.rstrip("/")), version))
         self._refresh(tname)
 
     def commit(self) -> None:
-        """Make the transaction's writes permanent; GC pinned pre-image
-        versions that are no longer current."""
-        import shutil
-
-        from infinidb_spark.operators.dml import release_retained
-
+        """Make the transaction's writes permanent; GC retained
+        pre-image versions that are no longer current."""
         if self._txn is None:
             return
         for name in self._txn:
-            self._release_and_gc(name, release_retained, shutil)
+            self._release_and_gc(name)
         self._txn = None
         self._savepoints = []
 
-    def _release_and_gc(self, name: str, release_retained, shutil) -> None:
-        """Drop every pin (base + savepoints) for a table and GC the
-        pinned version dirs that are no longer current."""
+    def _release_and_gc(self, name: str) -> None:
+        """Drop every retention (base + savepoints) for a table and GC
+        the released versions that are no longer current — through the
+        engine's one GC rule (dml._gc_version, under the table lock), so
+        a version another writer has pinned as its snapshot survives."""
+        from infinidb_spark.operators.dml import (
+            _gc_version,
+            _table_lock_wait,
+            release_retained,
+        )
+
         path = self._managed.get(name)
         if path is None:
             return
-        current = os.path.basename(os.path.realpath(path))
-        for ver in release_retained(path):
-            if ver != current:
-                old = os.path.join(os.path.dirname(path.rstrip("/")), ver)
-                if os.path.isdir(old):
-                    shutil.rmtree(old)
+        parent = os.path.dirname(path.rstrip("/"))
+        with _table_lock_wait(path, "GC"):
+            for ver in release_retained(path):
+                _gc_version(path, os.path.join(parent, ver))
 
     def rollback(self) -> None:
-        """Restore every touched table to its BEGIN state: re-point the
-        version symlink at the pinned pre-image and drop files appended
-        to it since the snapshot.  Metadata-only, no data rewrite."""
-        import shutil
-
-        from infinidb_spark.operators.dml import release_retained
-
+        """Restore every touched table to its BEGIN state by moving its
+        version pointer back to the retained pre-image.  Metadata-only,
+        no data rewrite."""
         if self._txn is None:
             return
-        for name, snap in self._txn.items():
-            self._restore_snapshot(name, snap)
-            self._release_and_gc(name, release_retained, shutil)
+        for name, version in self._txn.items():
+            self._restore_version(name, version)
+            self._release_and_gc(name)
         self._txn = None
         self._savepoints = []
 
@@ -1165,10 +1056,10 @@ class InfiniSession:
         return df
 
     def _apply_sysvar_assignment(self, name: str, value: str, d) -> None:
-        """Apply one system-variable assignment.  autocommit gets the
-        _sysvar_on normalization (0/OFF/FALSE/NO in any case/quoting)
-        and MySQL's enable-commits rule; everything else is stored for
-        SHOW VARIABLES / @@ echo."""
+        """Apply one system-variable assignment.  autocommit gets MySQL's
+        boolean normalization (0/OFF/FALSE/NO in any case/quoting) and
+        its enable-commits rule; everything else is stored for SHOW
+        VARIABLES / @@ echo."""
         if name == "autocommit":
             norm = str(value).strip().strip("'\"").upper()
             self._autocommit = norm not in ("0", "OFF", "FALSE", "NO")
@@ -2075,29 +1966,15 @@ class InfiniSession:
             )
             aligned, _ai_handle = self._fill_auto_increment(st["table"], aligned)
             try:
-                # char-null semantics BEFORE the NOT NULL check (same
-                # order as _insert_staged): an empty field bound for a
-                # NOT NULL string column is a violation, not silent NULL
-                from infinidb_spark.operators.dml import charnull
-
-                aligned = charnull(aligned)
                 # typed-CREATE NOT NULL applies to LOAD DATA exactly
-                # like INSERT (MySQL rejects the statement); the scan
-                # below reads the persisted bulk-load cache, not the
-                # file again
-                notnull = self._table_meta.get(st["table"], {}).get("notnull", [])
-                if notnull:
-                    pred = " OR ".join(f"`{c}` IS NULL" for c in notnull)
-                    bad = aligned.filter(pred).count()
-                    if bad:
-                        raise ValueError(
-                            f"LOAD DATA into {st['table']!r}: {bad} row(s) "
-                            f"violate NOT NULL ({', '.join(notnull)})"
-                        )
-                n_loaded = result.rows_loaded
+                # like INSERT (MySQL rejects the statement), checked on
+                # the staged files after char-null semantics, so an
+                # empty field bound for a NOT NULL string column is a
+                # violation, not a silent NULL
+                meta = self._table_meta.get(st["table"], {})
                 insert_into(
-                    aligned, path,
-                    codec=self._table_meta.get(st["table"], {}).get("codec"),
+                    aligned, path, codec=meta.get("codec"),
+                    notnull=meta.get("notnull", []), stmt="LOAD DATA",
                 )
             finally:
                 # unpersist on reject too — repeated rejected statements
@@ -2109,7 +1986,7 @@ class InfiniSession:
             # cpimport-style reject accounting (the .bad file analog),
             # surfaced through calgetstats() by the execute() wrapper
             self._last_rejects = result.rows_rejected
-            return n_loaded
+            return result.rows_loaded
         if st["kind"] == "insert":
             src = self.spark.sql(st["select_sql"])
             target = read_table(self.spark, path).schema
@@ -2143,61 +2020,29 @@ class InfiniSession:
             )
             aligned, _ai_handle = self._fill_auto_increment(st["table"], aligned)
             try:
-                notnull = meta.get("notnull", [])
-                if notnull:
-                    # stage once, validate NOT NULL from the staged
-                    # files, link in on success — the source query still
-                    # runs once
-                    n = self._insert_staged(
-                        st["table"], path, aligned, notnull,
-                        codec=meta.get("codec"),
-                    )
-                else:
-                    # footer-sum counts before/after: the source query
-                    # runs only once (inside the write), never twice
-                    before = read_table(self.spark, path).count()
-                    insert_into(aligned, path, codec=meta.get("codec"))
-                    n = read_table(self.spark, path).count() - before
+                # the count comes out of the write job; the source
+                # query runs once
+                n = insert_into(
+                    aligned, path, codec=meta.get("codec"),
+                    notnull=meta.get("notnull", []),
+                )
             finally:
                 # unpersist on NOT NULL reject too, not only on success
                 if _ai_handle is not None:
                     _ai_handle.unpersist()
         elif st["kind"] == "update":
-            # SET infinidb_concurrent_dml = 1 routes UPDATE/DELETE
-            # through the optimistic snapshot-isolation path (concurrent
-            # disjoint writers all commit; row overlap aborts the later
-            # committer) — the version-buffer admission analog
-            if self._sysvar_on("infinidb_concurrent_dml"):
-                from infinidb_spark.operators.dml import update_table_optimistic
-
-                n = update_table_optimistic(
-                    self.spark,
-                    path,
-                    F.expr(st["where"] or "true"),
-                    {c: F.expr(e) for c, e in st["assignments"].items()},
-                    codec=self._table_meta.get(st["table"], {}).get("codec"),
-                )
-            else:
-                n = update_table(
-                    self.spark,
-                    path,
-                    F.expr(st["where"] or "true"),
-                    {c: F.expr(e) for c, e in st["assignments"].items()},
-                    codec=self._table_meta.get(st["table"], {}).get("codec"),
-                )
+            n = update_table(
+                self.spark,
+                path,
+                F.expr(st["where"] or "true"),
+                {c: F.expr(e) for c, e in st["assignments"].items()},
+                codec=self._table_meta.get(st["table"], {}).get("codec"),
+            )
         elif st["kind"] == "delete":
-            if self._sysvar_on("infinidb_concurrent_dml"):
-                from infinidb_spark.operators.dml import delete_from_optimistic
-
-                n = delete_from_optimistic(
-                    self.spark, path, F.expr(st["where"] or "true"),
-                    codec=self._table_meta.get(st["table"], {}).get("codec"),
-                )
-            else:
-                n = delete_from(
-                    self.spark, path, F.expr(st["where"] or "true"),
-                    codec=self._table_meta.get(st["table"], {}).get("codec"),
-                )
+            n = delete_from(
+                self.spark, path, F.expr(st["where"] or "true"),
+                codec=self._table_meta.get(st["table"], {}).get("codec"),
+            )
         else:
             # a catch-all `else: delete` here would turn any FUTURE
             # parser kind that carries a 'table' key but is missed

@@ -113,11 +113,10 @@ def test_update_then_delete_roundtrip_consistency(spark, nation_table):
 
 @pytest.fixture()
 def clustered_lineitem_table(spark, sf_dir):
-    """A managed lineitem clustered on l_orderkey: 8 disjoint-range files,
-    so a key-ranged DML prunes to a strict file subset."""
+    """A managed lineitem clustered on l_orderkey: 8 disjoint-range files."""
     from infinidb_spark.operators.dml import create_table as _ct
 
-    workdir = tempfile.mkdtemp(prefix="infinidb_dml_pruned_")
+    workdir = tempfile.mkdtemp(prefix="infinidb_dml_clustered_")
     table = os.path.join(workdir, "lineitem")
     li = (
         load_tables(spark, sf_dir, names=("lineitem",))["lineitem"]
@@ -130,98 +129,20 @@ def clustered_lineitem_table(spark, sf_dir):
     shutil.rmtree(workdir, ignore_errors=True)
 
 
-def _inodes(table):
-    real = os.path.realpath(table)
-    return {
-        f: os.stat(os.path.join(real, f)).st_ino
-        for f in os.listdir(real)
-        if f.endswith(".parquet")
-    }
-
-
-def test_update_pruned_hardlinks_untouched_files(spark, clustered_lineitem_table):
-    from infinidb_spark.operators.dml import update_table_pruned
-
-    table = clustered_lineitem_table
-    before = spark.read.parquet(table)
-    expect_n = before.filter("l_orderkey between 0 and 40").count()
-    expect_sum = before.agg(F.sum("l_quantity")).collect()[0][0]
-    expect_total = before.count()  # materialize BEFORE the swap GCs old files
-    inodes_before = _inodes(table)
-
-    n = update_table_pruned(
-        spark,
-        table,
-        [("l_orderkey", "between", 0, 40)],
-        {"l_quantity": F.col("l_quantity") + 1000},
-    )
-    assert n == expect_n
-
-    after = spark.read.parquet(table)
-    assert after.count() == expect_total
-    got_sum = after.agg(F.sum("l_quantity")).collect()[0][0]
-    assert got_sum == expect_sum + 1000 * expect_n
-    # only matching rows changed
-    assert after.filter("l_quantity >= 1000").count() == expect_n
-
-    # untouched files carried over as hard links (same inode), and at
-    # least one file was actually rewritten
-    inodes_after = _inodes(table)
-    carried = set(inodes_before.values()) & set(inodes_after.values())
-    assert len(carried) >= 6          # 8 range files, narrow predicate
-    assert len(carried) < len(inodes_after)
-
-
-def test_delete_pruned_matches_full_delete_semantics(spark, clustered_lineitem_table):
-    from infinidb_spark.operators.dml import delete_from_pruned
-
-    table = clustered_lineitem_table
-    before = spark.read.parquet(table)
-    expect_gone = before.filter("l_orderkey < 30").count()
-    total = before.count()
-    inodes_before = _inodes(table)
-
-    n = delete_from_pruned(spark, table, [("l_orderkey", "<", 30)])
-    assert n == expect_gone
-    after = spark.read.parquet(table)
-    assert after.count() == total - expect_gone
-    assert after.filter("l_orderkey < 30").count() == 0
-    assert len(set(inodes_before.values()) & set(_inodes(table).values())) >= 6
-
-
-def test_pruned_dml_refuses_partitioned_layout(spark, sf_dir, tmp_path):
-    from infinidb_spark.operators.dml import delete_from_pruned
-
-    table = str(tmp_path / "part_table")
-    nation = load_tables(spark, sf_dir, names=("nation",))["nation"]
-    create_table(nation, table, partition_by=["n_regionkey"])
-    with pytest.raises(ValueError, match="flat table layouts"):
-        delete_from_pruned(spark, table, [("n_nationkey", "<", 5)])
-
-
-def test_update_pruned_type_changing_set_keeps_schema(spark, clustered_lineitem_table):
-    """A type-changing SET must not split the table schema between
-    rewritten and hard-linked files: SET keeps the declared type."""
-    from infinidb_spark.operators.dml import update_table_pruned
-
+def test_update_type_changing_set_keeps_schema(spark, clustered_lineitem_table):
+    """A type-changing SET must not change the table schema (MySQL: SET
+    casts to the column type): SET keeps the declared type."""
     table = clustered_lineitem_table
     schema_before = spark.read.parquet(table).schema
-    update_table_pruned(
+    update_table(
         spark,
         table,
-        [("l_orderkey", "between", 0, 20)],
+        F.col("l_orderkey").between(0, 20),
         {"l_quantity": F.col("l_quantity").cast("string")},  # coerced back
     )
     after = spark.read.parquet(table)
     assert after.schema == schema_before
     after.count()  # whole table still readable
-
-
-def test_pruned_dml_requires_predicates(spark, clustered_lineitem_table):
-    from infinidb_spark.operators.dml import delete_from_pruned
-
-    with pytest.raises(ValueError, match="at least one predicate"):
-        delete_from_pruned(spark, clustered_lineitem_table, [])
 
 
 def test_alter_add_null_column_is_metadata_only(spark, nation_table):

@@ -84,7 +84,7 @@ def test_concurrent_nightly_writers_two_tables(spark, sf_dir):
     """dwDMrun.sh's nightly pattern from TWO sessions at once: each
     session runs its cpimport-style load + UPDATE/DELETE on its OWN
     table concurrently, while daytime readers poll both tables.  The
-    single-writer-per-table design must let disjoint-table writers
+    per-table commit lock must let disjoint-table writers
     proceed in parallel, and every successful read must be atomically
     consistent (a pre- or post-statement state, never a torn mix)."""
     import threading
@@ -163,8 +163,9 @@ def test_concurrent_nightly_writers_two_tables(spark, sf_dir):
 
 
 def test_same_table_writer_contention_and_recovery(spark, sf_dir):
-    """Two writers on the SAME table: the O_EXCL lock file makes the
-    second fail fast with the reference's calcleartablelock guidance
+    """Two writers on the SAME table: while the O_EXCL lock file is
+    held, the second waits at most its ``lock_timeout`` for the commit
+    lock and then fails with the reference's calcleartablelock guidance
     (`ha_calpont_impl.cpp:1966-2061` lock semantics), and
     clear_table_lock is the manual recovery that lets DML proceed."""
     import pytest
@@ -183,11 +184,11 @@ def test_same_table_writer_contention_and_recovery(spark, sf_dir):
     try:
         create_table(nation, table)
         with _table_lock(table, "UPDATE"):
-            # a second writer must NOT queue silently — fail fast
+            # a second writer must NOT queue silently — bounded wait
             with pytest.raises(RuntimeError, match="calcleartablelock"):
                 update_table(
                     spark, table, F.col("n_regionkey") == 1,
-                    {"n_name": F.lit("X")},
+                    {"n_name": F.lit("X")}, lock_timeout=0.5,
                 )
             locks = view_table_locks(workdir, "nation")
             assert len(locks) == 1 and locks[0]["op"] == "UPDATE"

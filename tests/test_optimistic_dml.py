@@ -20,10 +20,9 @@ from infinidb_spark.operators.dml import (
     ConcurrentWriteConflict,
     _pins_dir,
     create_table,
-    delete_from_optimistic,
+    delete_from,
     read_table,
     update_table,
-    update_table_optimistic,
 )
 
 
@@ -60,7 +59,7 @@ def test_disjoint_writers_both_commit_interleaved(spark, tmp_path):
     def a_commits():
         assert update_table(spark, t, F.col("k") < 100, {"v": F.lit(1)}) == 100
 
-    n = update_table_optimistic(
+    n = update_table(
         spark, t, F.col("k") >= 900, {"v": F.lit(2)}, _before_commit=a_commits
     )
     assert n == 100
@@ -79,7 +78,7 @@ def test_overlap_aborts_later_committer(spark, tmp_path):
         update_table(spark, t, F.col("k") < 100, {"v": F.lit(1)})
 
     with pytest.raises(ConcurrentWriteConflict, match="first committer wins"):
-        update_table_optimistic(
+        update_table(
             spark, t, F.col("k") < 50, {"v": F.lit(2)}, _before_commit=a_commits
         )
     out = read_table(spark, t)
@@ -101,7 +100,7 @@ def test_overlap_via_moved_row_detected(spark, tmp_path):
         update_table(spark, t, F.col("k") < 100, {"grp": F.lit(99)})
 
     with pytest.raises(ConcurrentWriteConflict):
-        update_table_optimistic(
+        update_table(
             spark, t, F.col("grp") == 99, {"v": F.lit(5)}, _before_commit=a_commits
         )
     assert _no_debris(t)
@@ -113,7 +112,7 @@ def test_delete_disjoint_rebases(spark, tmp_path):
     def a_commits():
         update_table(spark, t, F.col("k") < 10, {"v": F.lit(7)})
 
-    n = delete_from_optimistic(
+    n = delete_from(
         spark, t, F.col("k") >= 990, _before_commit=a_commits
     )
     assert n == 10
@@ -124,8 +123,8 @@ def test_delete_disjoint_rebases(spark, tmp_path):
 
 
 def test_concurrent_insert_is_a_snapshot_change(spark, tmp_path):
-    """An INSERT lands in the SAME version directory (append, no swap) —
-    the content token must still register it, or the stale rewrite would
+    """An INSERT committed between a writer's snapshot and its commit
+    must invalidate the snapshot token, or the stale rewrite would
     silently DROP the inserted rows.  With no pre-images to conflict
     with, the statement rebases: it serializes after the INSERT, so the
     inserted rows are visible to (and updated by) the re-execution."""
@@ -141,7 +140,7 @@ def test_concurrent_insert_is_a_snapshot_change(spark, tmp_path):
         )
         insert_into(extra, t)
 
-    n = update_table_optimistic(
+    n = update_table(
         spark, t, F.col("k") >= 1000, {"v": F.lit(3)}, _before_commit=a_inserts
     )
     out = read_table(spark, t)
@@ -164,7 +163,7 @@ def test_concurrent_insert_disjoint_rebase_keeps_rows(spark, tmp_path):
         )
         insert_into(extra, t)
 
-    n = update_table_optimistic(
+    n = update_table(
         spark, t, F.col("k") < 100, {"v": F.lit(4)}, _before_commit=a_inserts
     )
     assert n == 100
@@ -176,15 +175,15 @@ def test_concurrent_insert_disjoint_rebase_keeps_rows(spark, tmp_path):
 
 
 def test_two_threads_disjoint_ranges_both_commit(spark, tmp_path):
-    """The VERDICT-r05 acceptance scenario: two real concurrent writers
-    on disjoint key ranges of ONE table; both must commit whatever the
-    interleaving."""
+    """Default settings, concurrent writers lose no rows: two real
+    concurrent UPDATEs on disjoint key ranges of ONE table both commit
+    whatever the interleaving."""
     t = _mk_table(spark, tmp_path)
     errs: list[Exception] = []
 
     def run(lo, hi, tag):
         try:
-            update_table_optimistic(
+            update_table(
                 spark, t, (F.col("k") >= lo) & (F.col("k") < hi),
                 {"v": F.lit(tag)}, lock_timeout=120.0,
             )
@@ -202,40 +201,6 @@ def test_two_threads_disjoint_ranges_both_commit(spark, tmp_path):
     assert _no_debris(t)
 
 
-def test_session_sysvar_routes_to_optimistic(spark, monkeypatch):
-    """SET infinidb_concurrent_dml=1 routes UPDATE/DELETE through the
-    optimistic path (and the statements still work end-to-end)."""
-    import shutil
-
-    import infinidb_spark.operators.dml as dml
-    from infinidb_spark.session import InfiniSession
-
-    calls = []
-    orig = dml.update_table_optimistic
-
-    def spy(*a, **k):
-        calls.append("optimistic")
-        return orig(*a, **k)
-
-    sess = InfiniSession(spark)
-    try:
-        sess.execute("CREATE TABLE ot (k BIGINT, v BIGINT)")
-        sess.execute("INSERT INTO ot VALUES (1, 0), (2, 0), (3, 0)")
-        sess.execute("SET infinidb_concurrent_dml = 1")
-        monkeypatch.setattr(dml, "update_table_optimistic", spy)
-        n = sess.execute("UPDATE ot SET v = 5 WHERE k <= 2")
-        assert n == 2 and calls == ["optimistic"]
-        n = sess.execute("DELETE FROM ot WHERE k = 3")
-        assert n == 1
-        assert sess.sql("SELECT sum(v) FROM ot").collect()[0][0] == 10
-        sess.execute("SET infinidb_concurrent_dml = 0")
-        n = sess.execute("UPDATE ot SET v = 6 WHERE k = 1")
-        assert n == 1 and calls == ["optimistic"]  # back on the locked path
-    finally:
-        if sess._managed_root:
-            shutil.rmtree(sess._managed_root, ignore_errors=True)
-
-
 def test_retry_exhaustion_gives_up_cleanly(spark, tmp_path):
     t = _mk_table(spark, tmp_path)
 
@@ -243,7 +208,7 @@ def test_retry_exhaustion_gives_up_cleanly(spark, tmp_path):
         update_table(spark, t, F.col("k") < 10, {"v": F.lit(1)})
 
     with pytest.raises(ConcurrentWriteConflict, match="giving up"):
-        update_table_optimistic(
+        update_table(
             spark, t, F.col("k") >= 500, {"v": F.lit(9)},
             max_retries=0, _before_commit=a_commits,
         )
@@ -264,25 +229,13 @@ def test_update_where_on_assigned_column_sets_all_columns(spark, tmp_path):
 
 def test_optimistic_update_where_on_assigned_column(spark, tmp_path):
     t = _mk_table(spark, tmp_path, n=100)
-    n = update_table_optimistic(
+    n = update_table(
         spark, t, F.col("v") == 0, {"v": F.lit(1), "grp": F.lit(77)}
     )
     assert n == 100
     out = read_table(spark, t)
     assert out.filter((F.col("v") == 1) & (F.col("grp") == 77)).count() == 100
     assert _no_debris(t)
-
-
-def test_pruned_update_where_on_assigned_column(spark, tmp_path):
-    from infinidb_spark.operators.dml import update_table_pruned
-
-    t = _mk_table(spark, tmp_path, n=100)
-    n = update_table_pruned(
-        spark, t, [("v", "=", 0)], {"v": F.lit(1), "grp": F.lit(77)}
-    )
-    assert n == 100
-    out = read_table(spark, t)
-    assert out.filter((F.col("v") == 1) & (F.col("grp") == 77)).count() == 100
 
 
 def test_set_exprs_see_updated_values_left_to_right(spark, tmp_path):
@@ -295,8 +248,9 @@ def test_set_exprs_see_updated_values_left_to_right(spark, tmp_path):
 
 
 def test_concurrent_insert_survives_optimistic_commit(spark, tmp_path):
-    """An INSERT landing between a committer's rewrite and its commit
-    is never dropped: the snapshot token changes, the committer proves
+    """Default settings, concurrent writers lose no rows: an INSERT
+    landing between an UPDATE's rewrite and its commit is never
+    dropped — the snapshot token changes, the UPDATE proves
     disjointness against the inserted rows and rebases over them."""
     from infinidb_spark.operators.dml import insert_into
 
@@ -310,7 +264,7 @@ def test_concurrent_insert_survives_optimistic_commit(spark, tmp_path):
         )
         insert_into(rows, t)
 
-    n = update_table_optimistic(
+    n = update_table(
         spark, t, F.col("v") == 0, {"v": F.lit(5)}, _before_commit=b_inserts
     )
     assert n == 100
@@ -322,9 +276,9 @@ def test_concurrent_insert_survives_optimistic_commit(spark, tmp_path):
 
 
 def test_insert_waits_for_table_lock(spark, tmp_path):
-    """insert_into serializes with rewriters: while a writer holds the
-    table lock, an insert waits (bounded) instead of appending into a
-    version directory the writer may GC."""
+    """insert_into commits under the table lock: while a writer holds
+    it, an insert's link-in and swap wait (bounded), then fail with the
+    lock error and leave nothing behind."""
     from infinidb_spark.operators.dml import _table_lock, insert_into
 
     t = _mk_table(spark, tmp_path, n=10)
@@ -342,6 +296,7 @@ def test_insert_waits_for_table_lock(spark, tmp_path):
         cm.__exit__(None, None, None)
     insert_into(rows, t)
     assert read_table(spark, t).count() == 12
+    assert _no_debris(t)
 
 
 def test_finished_holder_does_not_release_anothers_lock(tmp_path):
@@ -390,38 +345,6 @@ def test_corrupt_lock_visible_and_clearable_by_table_name(tmp_path):
     assert view_table_locks(str(tmp_path), "t") == []
 
 
-def test_concurrent_dml_sysvar_is_case_insensitive(spark, monkeypatch):
-    """MySQL boolean sysvars accept on/ON/TRUE/1 — every spelling must
-    route to the optimistic path."""
-    import shutil
-
-    import infinidb_spark.operators.dml as dml
-    from infinidb_spark.session import InfiniSession
-
-    calls = []
-    orig = dml.update_table_optimistic
-
-    def spy(*a, **k):
-        calls.append("optimistic")
-        return orig(*a, **k)
-
-    sess = InfiniSession(spark)
-    try:
-        sess.execute("CREATE TABLE oc (k BIGINT, v BIGINT)")
-        sess.execute("INSERT INTO oc VALUES (1, 0), (2, 0)")
-        monkeypatch.setattr(dml, "update_table_optimistic", spy)
-        for i, spelling in enumerate(["on", "TRUE", "On", "1"]):
-            sess.execute(f"SET infinidb_concurrent_dml = {spelling}")
-            assert sess.execute(f"UPDATE oc SET v = {i + 1} WHERE k = 1") == 1
-        assert calls == ["optimistic"] * 4
-        sess.execute("SET infinidb_concurrent_dml = off")
-        assert sess.execute("UPDATE oc SET v = 9 WHERE k = 2") == 1
-        assert calls == ["optimistic"] * 4  # off -> pessimistic path
-    finally:
-        if sess._managed_root:
-            shutil.rmtree(sess._managed_root, ignore_errors=True)
-
-
 def test_conflict_diff_reads_only_changed_files(spark, tmp_path, monkeypatch):
     """The disjoint-rebase overlap probe on an N-file table reads
     O(changed) files, not O(N) — the VB tracks changed blocks, never
@@ -460,7 +383,7 @@ def test_conflict_diff_reads_only_changed_files(spark, tmp_path, monkeypatch):
         drop_partitions(t, [victim])  # hard-links the 7 survivors
 
     pred = F.col("k") == -1  # matches nothing: guaranteed disjoint
-    n = dml.update_table_optimistic(
+    n = dml.update_table(
         spark, t, pred, {"v": F.lit(2)}, _before_commit=winner_drops_one_file
     )
     assert n == 0
@@ -471,11 +394,51 @@ def test_conflict_diff_reads_only_changed_files(spark, tmp_path, monkeypatch):
     assert sum(len(c) for c in read_calls) == 1
 
 
-def test_writer_killed_before_commit_is_garbage_collected(spark, tmp_path):
-    """Chaos: SIGKILL a writer between rewrite-build and commit; the
-    next writer GCs the orphan version dir and the dead pin and
-    proceeds (the stale-lock recovery analog for snapshots —
-    _pinned_versions' dead-pid GC)."""
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+#: writer scripts for the fault-injection test, one per kill point.  Each
+#: touches ``marker`` at the kill point and then stalls until killed.
+_VICTIMS = {
+    # inside the rewrite's Parquet write: a UDF in the SET stalls a task
+    "mid_write": """
+        def stall(v):
+            open(MARKER, "w").close()
+            time.sleep(600)
+            return v
+
+        update_table(spark, T, F.col("k") < 50,
+                     {"v": F.udf(stall, "int")(F.lit(9))})
+    """,
+    # rewrite built, before the commit lock and swap
+    "before_swap": """
+        def stall():
+            open(MARKER, "w").close()
+            time.sleep(600)
+
+        update_table(spark, T, F.col("k") < 50, {"v": F.lit(9)},
+                     _before_commit=stall)
+    """,
+    # INSERT rows staged, before the link-in and swap
+    "insert_before_link": """
+        def stall():
+            open(MARKER, "w").close()
+            time.sleep(600)
+
+        rows = spark.range(500, 510).select(
+            F.col("id").cast("bigint").alias("k"),
+            F.lit(0).cast("int").alias("grp"), F.lit(9).cast("int").alias("v"))
+        insert_into(rows, T, _before_commit=stall)
+    """,
+}
+
+
+@pytest.mark.parametrize("kill_point", sorted(_VICTIMS))
+def test_writer_killed_before_commit_is_garbage_collected(spark, tmp_path, kill_point):
+    """Chaos: SIGKILL a writer at each point before its commit; the
+    table reads back as its exact pre-image, and the next default
+    writer GCs the orphan version dir and the dead pin and proceeds
+    (the stale-lock recovery analog for snapshots — _pinned_versions'
+    dead-pid GC)."""
     import signal
     import subprocess
     import sys
@@ -483,66 +446,60 @@ def test_writer_killed_before_commit_is_garbage_collected(spark, tmp_path):
     import time as _time
 
     t = _mk_table(spark, tmp_path, n=200)
-    marker = str(tmp_path / "built")
+    pre_image = sorted(read_table(spark, t).collect())
+    marker = str(tmp_path / "at_kill_point")
 
     child_src = textwrap.dedent(f"""
-        import os, time
+        import time
         from pyspark.sql import functions as F
         from infinidb_spark.session import get_spark
-        from infinidb_spark.operators.dml import update_table_optimistic
+        from infinidb_spark.operators.dml import insert_into, update_table
         spark = get_spark("victim", cpus=2)
         spark.sparkContext.setLogLevel("ERROR")
-
-        def stall():
-            open({marker!r}, "w").close()
-            time.sleep(600)   # hold the built rewrite + pin; parent kills us
-
-        update_table_optimistic(
-            spark, {t!r}, F.col("k") < 50, {{"v": F.lit(9)}},
-            _before_commit=stall,
-        )
-    """)
+        T, MARKER = {t!r}, {marker!r}
+    """) + textwrap.dedent(_VICTIMS[kill_point])
     proc = subprocess.Popen(
         [sys.executable, "-c", child_src],
-        cwd="/root/repo",
+        cwd=_REPO,
         stdout=subprocess.DEVNULL,
         stderr=subprocess.DEVNULL,
     )
     try:
         deadline = _time.monotonic() + 180
         while not os.path.exists(marker):
-            assert proc.poll() is None, "victim writer died before building"
-            assert _time.monotonic() < deadline, "victim never built its rewrite"
+            assert proc.poll() is None, "victim writer died before its kill point"
+            assert _time.monotonic() < deadline, "victim never reached its kill point"
             _time.sleep(0.5)
-        # killed between rewrite-build and commit: pin + version orphaned
         proc.send_signal(signal.SIGKILL)
         proc.wait(timeout=30)
     finally:
         if proc.poll() is None:
             proc.kill()
 
-    pins = os.listdir(_pins_dir(t))
-    assert pins, "victim should have left a pin behind"
     parent, base = os.path.dirname(t), os.path.basename(t)
+    live = os.path.basename(os.path.realpath(t))
 
-    # next writer proceeds despite the orphan state...
-    n = update_table_optimistic(spark, t, F.col("k") >= 150, {"v": F.lit(3)})
+    def orphans():
+        return [
+            f for f in os.listdir(parent)
+            if f.startswith(base + ".__v") and f != live
+        ]
+
+    assert os.listdir(_pins_dir(t)), "victim should have left a pin behind"
+    assert orphans(), "victim should have left its pending version behind"
+    assert sorted(read_table(spark, t).collect()) == pre_image
+
+    # the next default writer proceeds despite the orphan state...
+    n = update_table(spark, t, F.col("k") >= 150, {"v": F.lit(3)})
     assert n == 50
     out = read_table(spark, t)
     assert out.filter(F.col("v") == 9).count() == 0  # victim never committed
     assert out.filter(F.col("v") == 3).count() == 50
     assert out.count() == 200
-
-    # ...and the dead pid's pin is gone (dead-pid GC)
-    assert os.listdir(_pins_dir(t)) == [] if os.path.isdir(_pins_dir(t)) else True
-    # the victim's orphan version dir is GC-able: no version dir other
-    # than the live one survives the next writer's GC pass
+    # ...and collects the dead pid's pin and the victim's version dir
     live = os.path.basename(os.path.realpath(t))
-    orphans = [
-        f for f in os.listdir(parent)
-        if f.startswith(base + ".__v") and f != live
-    ]
-    assert orphans == [], orphans
+    assert os.listdir(_pins_dir(t)) == []
+    assert orphans() == []
 
 
 def test_conflict_diff_on_partitioned_table(spark, tmp_path):
@@ -563,7 +520,7 @@ def test_conflict_diff_on_partitioned_table(spark, tmp_path):
         # plain full rewrite on disjoint rows (flattens partitioning)
         dml.update_table(spark, t, F.col("k") < 50, {"v": F.lit(1)})
 
-    n = dml.update_table_optimistic(
+    n = dml.update_table(
         spark, t, F.col("k") >= 350, {"v": F.lit(2)}, _before_commit=winner
     )
     assert n == 50
@@ -574,10 +531,11 @@ def test_conflict_diff_on_partitioned_table(spark, tmp_path):
 
 
 def test_insert_then_swap_winner_rebases_not_aborts(spark, tmp_path):
-    """A file INSERTed into the pinned snapshot dir AFTER pinning, then
-    carried into a winner's rewrite, is a phantom — the changed-file
-    probe must re-walk the pinned dirs at diff time (a pin-time identity
-    map would see those rows only on the winner's side and abort)."""
+    """Rows INSERTed after a writer pinned its snapshot, then carried
+    into a winner's rewrite, are phantoms — the insert chains its
+    version onto the writer's pin, and the overlap probe diffs the
+    winner against that version (diffing against the bare snapshot
+    would see those rows only on the winner's side and abort)."""
     import infinidb_spark.operators.dml as dml
 
     t = _mk_table(spark, tmp_path, n=100)
@@ -588,12 +546,12 @@ def test_insert_then_swap_winner_rebases_not_aborts(spark, tmp_path):
             F.lit(0).cast("int").alias("grp"),
             F.lit(0).cast("int").alias("v"),
         )
-        dml.insert_into(extra, t)  # appends into OUR pinned snapshot dir
+        dml.insert_into(extra, t)  # chained onto OUR snapshot pin
         # swap winner whose rewrite carries the inserted rows
         update_table(spark, t, F.col("k") < 10, {"v": F.lit(1)})
 
     # predicate matches ONLY the concurrently-inserted rows
-    n = update_table_optimistic(
+    n = update_table(
         spark, t, F.col("k") >= 1000, {"v": F.lit(2)}, _before_commit=winner
     )
     assert n == 5
@@ -604,80 +562,60 @@ def test_insert_then_swap_winner_rebases_not_aborts(spark, tmp_path):
     assert _no_debris(t)
 
 
-def test_snapshot_stats_o_changed_dirs(tmp_path, monkeypatch):
-    """_snapshot is O(directories) + O(changed-dir files), not O(files):
-    a warm snapshot of a quiescent N-file table re-lists ZERO
-    directories; touching one subdirectory re-lists exactly that one.
-    The reference keeps its extent map memory-resident for the same
-    per-statement-identity reason (versioning/BRM/extentmap.h:116)."""
+def test_snapshot_token_tracks_every_file(tmp_path):
+    """_snapshot walks every directory on every call: the token changes
+    as soon as a file appears anywhere in the version, also within the
+    same timestamp tick, and is content-addressed (removing the file
+    restores it)."""
     from infinidb_spark.operators import dml
 
     root = tmp_path / "t"
-    for d in range(6):
+    for d in range(3):
         sub = root / f"part={d}"
         sub.mkdir(parents=True)
-        for f in range(20):
+        for f in range(4):
             (sub / f"f{f}.parquet").write_bytes(b"x" * (d + f + 1))
-
-    # disable the racily-clean guard: the files were just written, and
-    # the test asserts the steady-state (quiescent-table) behavior
-    monkeypatch.setattr(dml, "_SNAP_RACY_NS", -1)
-    dml._SNAP_CACHE.clear()
-
-    calls: list[str] = []
-    real_scan = dml._scan_dir
-
-    def counting_scan(d):
-        calls.append(d)
-        return real_scan(d)
-
-    monkeypatch.setattr(dml, "_scan_dir", counting_scan)
+    (root / ".stage").mkdir()
+    (root / ".stage" / "hidden.parquet").write_bytes(b"h")
 
     _, tok1, entries1 = dml._snapshot(str(root))
-    assert len(entries1) == 120
-    assert len(calls) == 7  # root + 6 subdirs, cold
-
-    calls.clear()
+    assert len(entries1) == 12  # hidden dirs are not data
+    (root / "part=1" / "f_new.parquet").write_bytes(b"y" * 9)
     _, tok2, entries2 = dml._snapshot(str(root))
-    assert calls == []  # warm: zero directory listings, zero file stats
-    assert (tok2, entries2) == (tok1, entries1)
-
-    # one new file in one subdir → exactly that directory re-listed
-    (root / "part=3" / "f_new.parquet").write_bytes(b"y" * 9)
-    calls.clear()
-    _, tok3, entries3 = dml._snapshot(str(root))
-    assert [os.path.basename(c) for c in calls] == ["part=3"]
-    assert tok3 != tok1 and len(entries3) == 121
-
-    # deleting it restores the original token (content-addressed)
-    (root / "part=3" / "f_new.parquet").unlink()
-    calls.clear()
-    _, tok4, _ = dml._snapshot(str(root))
-    assert [os.path.basename(c) for c in calls] == ["part=3"]
-    assert tok4 == tok1
-    dml._SNAP_CACHE.clear()
+    assert tok2 != tok1 and len(entries2) == 13
+    (root / "part=1" / "f_new.parquet").unlink()
+    assert dml._snapshot(str(root))[1] == tok1
 
 
-def test_snapshot_racy_window_always_rescans(tmp_path, monkeypatch):
-    """Directories modified within the racy window are rescanned AND not
-    cached — a same-tick concurrent writer can never alias."""
-    from infinidb_spark.operators import dml
+def test_join_update_uses_the_commit_protocol(spark, tmp_path):
+    """Multi-table UPDATE/DELETE take the same snapshot path: a winner
+    on disjoint rows makes them rebase, a winner on their rows aborts
+    them first-committer-wins."""
+    from infinidb_spark.operators.dml import delete_from_join, update_table_join
 
-    root = tmp_path / "t"
-    root.mkdir()
-    (root / "a.parquet").write_bytes(b"x")
+    t = _mk_table(spark, tmp_path, n=100)
+    other = spark.createDataFrame([(k,) for k in range(90, 100)], "ok bigint")
 
-    dml._SNAP_CACHE.clear()
-    calls: list[str] = []
-    real_scan = dml._scan_dir
-    monkeypatch.setattr(dml, "_scan_dir", lambda d: (calls.append(d), real_scan(d))[1])
+    def disjoint_winner():
+        update_table(spark, t, F.col("k") < 10, {"v": F.lit(1)})
 
-    # default window (0.5 s) — the directory was JUST written
-    dml._snapshot(str(root))
-    dml._snapshot(str(root))
-    assert len(calls) == 2  # no cache hit inside the window
-    assert str(root) not in dml._SNAP_CACHE
-    dml._SNAP_CACHE.clear()
+    n = update_table_join(
+        spark, t, other, "k", "ok", {"v": F.lit(2)},
+        _before_commit=disjoint_winner,
+    )
+    assert n == 10
+    out = read_table(spark, t)
+    assert out.filter(F.col("v") == 1).count() == 10
+    assert out.filter(F.col("v") == 2).count() == 10
+
+    def overlapping_winner():
+        update_table(spark, t, F.col("k") >= 95, {"v": F.lit(3)})
+
+    with pytest.raises(ConcurrentWriteConflict):
+        delete_from_join(spark, t, other, "k", "ok",
+                         _before_commit=overlapping_winner)
+    assert read_table(spark, t).count() == 100
+    assert _no_debris(t)
 
 
 def test_lock_file_is_per_holder_and_release_is_own_unlink(tmp_path):

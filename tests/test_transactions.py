@@ -2,9 +2,10 @@
 
 The reference resolves transactions through the version buffer
 (pre-image blocks pinned until commit/rollback — versioning/BRM/vss.h);
-the analog here pins pre-image version DIRECTORIES: BEGIN snapshots
-metadata only (version pointer + file listing), ROLLBACK re-points the
-symlink and drops appended files.  DDL implicitly commits (MySQL rule).
+the analog here retains pre-image version DIRECTORIES: every row write
+builds a new version, BEGIN records the live version name, and ROLLBACK
+moves the table's pointer back to it.  DDL implicitly commits (MySQL
+rule).
 """
 
 import os
@@ -56,6 +57,99 @@ def test_rollback_insert_only_drops_appended_files(sess):
     assert (9, 9.0) in _rows(sess, "txn_t")
     sess.execute("ROLLBACK")
     assert _rows(sess, "txn_t") == before
+
+
+def _file_set(version_dir):
+    """{relative path: content digest} of every file in a version."""
+    import hashlib
+
+    out = {}
+    for dirpath, _dirs, files in os.walk(version_dir):
+        for f in files:
+            fp = os.path.join(dirpath, f)
+            with open(fp, "rb") as fh:
+                out[os.path.relpath(fp, version_dir)] = hashlib.sha256(fh.read()).hexdigest()
+    return out
+
+
+def test_rollback_insert_leaves_preimage_byte_identical(sess):
+    """BEGIN; INSERT; ROLLBACK is a pointer move: nothing is added to
+    or deleted from the pre-image version."""
+    path = sess._managed["txn_t"]
+    pre = os.path.realpath(path)
+    files = _file_set(pre)
+    sess.execute("BEGIN")
+    sess.execute("INSERT INTO txn_t VALUES (9, 9.0)")
+    sess.execute("ROLLBACK")
+    assert os.path.realpath(path) == pre
+    assert _file_set(pre) == files
+
+
+def test_insert_and_load_advance_version_and_keep_preimage(sess, tmp_path):
+    """INSERT and LOAD DATA build a new version: the table's realpath
+    advances and the pre-image version directory is left untouched."""
+    from infinidb_spark.operators.dml import release_retained, retain_version
+
+    path = sess._managed["txn_t"]
+    src = tmp_path / "in.csv"
+    src.write_text("7,7.5\n8,8.5\n")
+    for stmt in (
+        "INSERT INTO txn_t VALUES (4, 4.0), (5, 5.0)",
+        f"LOAD DATA INFILE '{src}' INTO TABLE txn_t FIELDS TERMINATED BY ','",
+    ):
+        pre = os.path.realpath(path)
+        retain_version(path, os.path.basename(pre))  # keep it to inspect
+        files = _file_set(pre)
+        assert sess.execute(stmt) == 2
+        assert os.path.realpath(path) != pre
+        assert _file_set(pre) == files
+    release_retained(path)
+    assert [r[0] for r in _rows(sess, "txn_t")] == [1, 2, 3, 4, 5, 7, 8]
+
+
+def test_commit_gc_keeps_pinned_preimage(sess):
+    """COMMIT's GC goes through the engine's one GC rule: a pre-image a
+    concurrent writer has pinned as its snapshot survives COMMIT, and is
+    collected once the pin is removed."""
+    from infinidb_spark.operators.dml import _pin_version, _unpin
+
+    path = sess._managed["txn_t"]
+    pre = os.path.realpath(path)
+    sess.execute("BEGIN")
+    sess.execute("UPDATE txn_t SET v = 0 WHERE id = 1")
+    pin = _pin_version(path, os.path.basename(pre))
+    sess.execute("COMMIT")
+    assert os.path.isdir(pre)
+    _unpin(pin)
+    sess.execute("UPDATE txn_t SET v = 5 WHERE id = 2")  # next writer's sweep
+    assert not os.path.exists(pre)
+    assert len(_version_dirs(sess, "txn_t")) == 1
+
+
+def test_torn_retain_write_keeps_previous_set(sess, monkeypatch):
+    """A crash while writing the retain file leaves the previous
+    retained set readable, and the next UPDATE still commits."""
+    import json
+
+    from infinidb_spark.operators import dml
+
+    path = sess._managed["txn_t"]
+    live = os.path.basename(os.path.realpath(path))
+    dml.retain_version(path, live)
+
+    def torn(obj, fh):
+        fh.write('["tor')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn)
+    with pytest.raises(OSError, match="disk full"):
+        dml.retain_version(path, "other")
+    monkeypatch.undo()
+    assert dml.retained_versions(path) == {live}
+    assert not os.path.exists(path + ".__retain__.tmp")
+    assert sess.execute("UPDATE txn_t SET v = 7 WHERE id = 3") == 1
+    assert (3, 7.0) in _rows(sess, "txn_t")
+    dml.release_retained(path)
 
 
 def test_commit_persists_and_gcs_preimage(sess):

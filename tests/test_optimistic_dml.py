@@ -432,13 +432,25 @@ _VICTIMS = {
 }
 
 
-@pytest.mark.parametrize("kill_point", sorted(_VICTIMS))
-def test_writer_killed_before_commit_is_garbage_collected(spark, tmp_path, kill_point):
-    """Chaos: SIGKILL a writer at each point before its commit; the
-    table reads back as its exact pre-image, and the next default
-    writer GCs the orphan version dir and the dead pin and proceeds
-    (the stale-lock recovery analog for snapshots — _pinned_versions'
-    dead-pid GC)."""
+def test_writer_killed_before_commit_is_garbage_collected(spark, tmp_path):
+    """Chaos: SIGKILL an UPDATE after its rewrite is built, before the
+    swap; the table reads back as its exact pre-image, and the next
+    default writer GCs the orphan version dir and the dead pin and
+    proceeds (the stale-lock recovery analog for snapshots —
+    _pinned_versions' dead-pid GC)."""
+    _kill_writer_and_check_recovery(spark, tmp_path, "before_swap")
+
+
+@pytest.mark.parametrize(
+    "kill_point", sorted(k for k in _VICTIMS if k != "before_swap")
+)
+def test_writer_killed_mid_statement_is_garbage_collected(spark, tmp_path, kill_point):
+    """The same recovery for the other kill points: inside the UPDATE's
+    Parquet write, and with an INSERT's rows staged before the link-in."""
+    _kill_writer_and_check_recovery(spark, tmp_path, kill_point)
+
+
+def _kill_writer_and_check_recovery(spark, tmp_path, kill_point):
     import signal
     import subprocess
     import sys

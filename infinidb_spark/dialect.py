@@ -3933,6 +3933,18 @@ def _top_level_word(toks: list[Token], *words: str) -> int | None:
     return None
 
 
+def _where_cond(toks: list[Token], where_i: int | None, stmt: str) -> list[Token] | None:
+    """The condition tokens after a DML's top-level WHERE, or None when
+    there is no WHERE.  A WHERE with nothing after it is a syntax error
+    (MySQL 1064) — never an always-true filter."""
+    if where_i is None:
+        return None
+    cond = toks[where_i + 1 :]
+    if _next_code(cond, 0) is None:
+        raise DialectError(f"{stmt} ... WHERE without a search condition")
+    return cond
+
+
 def parse_statement(sql: str) -> dict:
     """Classify + parse one statement.  Returns a dict with ``kind`` ∈
     select|insert|update|delete; SELECTs carry the translated ``sql``,
@@ -4928,7 +4940,8 @@ def _parse_update(toks: list[Token], i: int) -> dict:
     tail = _resolve_quals(tail, t_names, o_names)
     where_i = _top_level_word(tail, "WHERE")
     set_toks = tail[:where_i] if where_i is not None else tail
-    where = render(tail[where_i + 1 :]).strip() if where_i is not None else None
+    cond = _where_cond(tail, where_i, "UPDATE")
+    where = render(cond).strip() if cond is not None else None
     assignments: dict[str, str] = {}
     for part in _split_args(set_toks):
         k = _next_code(part, 0)
@@ -5372,8 +5385,8 @@ def _parse_delete(toks: list[Token], i: int) -> dict:
     tail = toks[j + 1 :]
     if _top_level_word(tail, "LIMIT", "ORDER") is not None:
         raise DialectError("DELETE ... ORDER BY/LIMIT is not supported")
-    where_i = _top_level_word(tail, "WHERE")
-    where = render(tail[where_i + 1 :]).strip() if where_i is not None else None
+    cond = _where_cond(tail, _top_level_word(tail, "WHERE"), "DELETE")
+    where = render(cond).strip() if cond is not None else None
     return {"kind": "delete", "table": table, "where": where}
 
 
@@ -5463,11 +5476,10 @@ def _parse_delete_join(toks: list[Token], from_i: int, del_ref: str) -> dict:
     t_names = {n for n in (alias, table) if n}
     o_names = {n for n in (other_alias, other) if n}
     on_t, on_o = _parse_join_eq(on_toks, t_names, o_names)
+    cond = _where_cond(tail, where_i, "DELETE")
     where = None
-    if where_i is not None:
-        where = render(
-            _resolve_quals(tail[where_i + 1 :], t_names, o_names)
-        ).strip()
+    if cond is not None:
+        where = render(_resolve_quals(cond, t_names, o_names)).strip()
     return {
         "kind": "delete_join",
         "table": table,

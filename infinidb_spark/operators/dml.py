@@ -22,16 +22,25 @@ pre-image blocks stay readable until the pointer moves.
   and first-committer-wins abort (``ConcurrentWriteConflict``).
 * INSERT / LOAD write the new rows once into a pinned pending version,
   check NOT NULL there, then under the lock hard-link every file of the
-  live version in and swap.  An insert cannot conflict.
+  live version in and swap.  An insert cannot conflict.  A streaming
+  sink epoch is such an insert that also stages its commit marker
+  ``_epochs/<sink>/<epoch>`` (and any side relation, such as the dedup
+  hash store) in the same version, so one swap publishes all of it and
+  a replay finds the marker in the live version.
 * ROLLBACK moves the pointer back to the retained pre-image
   (``retain_version``).
+
+Every swap fsyncs the new version's files and directories before the
+pointer moves and the parent directory after it, so a committed version
+survives power loss, not only a process crash.  No writer adds or
+removes a file inside a live version; the one in-place write is the
+``_partitions.json`` sidecar (operators/partitions.py), under the lock.
 
 Affected-row counts come from an ``Observation`` on the written
 DataFrame, so no statement runs a separate count job.  Tables created
 before the symlink layout (plain directories) are migrated on the first
 swap.  DDL (create/alter/TRUNCATE/drop partitions, OPTIMIZE in
-sources/layout.py) holds the lock for its whole build, and the
-streaming sink links epoch files into the live version.
+sources/layout.py) holds the lock for its whole build.
 """
 
 from __future__ import annotations
@@ -279,16 +288,30 @@ def release_retained(table_dir: str) -> set[str]:
     return retained
 
 
+def _fsync_path(path: str) -> None:
+    """fsync a file or directory by path (a directory fsync persists its
+    ENTRIES — the names created or linked in it)."""
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
 def _swap(table_dir: str, new_dir: str) -> None:
     """Atomically point `table_dir` at `new_dir`, then GC the old version
     (unless a transaction retains it — see retain_version).
 
     The live path is a symlink; advancing it is ONE `os.replace` of a
     freshly-created link — atomic on POSIX, so a crash at any point
-    leaves a fully-consistent table.  A pre-symlink plain directory is
-    migrated first (rename to a version dir, then link); that rename is
-    itself atomic, and recovery from a crash between the two steps is
-    re-running any rewrite (the version dir is self-describing).
+    leaves a fully-consistent table.  Durable too: every file and
+    directory of `new_dir` is fsynced before the replace, and the
+    parent directory (the link and the version's own entry) after it,
+    so power loss cannot keep the pointer and lose what it points at.
+    A pre-symlink plain directory is migrated first (rename to a
+    version dir, then link); that rename is itself atomic, and recovery
+    from a crash between the two steps is re-running any rewrite (the
+    version dir is self-describing).
     """
     table_dir = table_dir.rstrip("/")
     old_target: str | None = None
@@ -301,11 +324,16 @@ def _swap(table_dir: str, new_dir: str) -> None:
         old_target = _new_version_dir(table_dir)
         os.rename(table_dir, old_target)
 
+    for dirpath, _, files in os.walk(new_dir):
+        for f in files:
+            _fsync_path(os.path.join(dirpath, f))
+        _fsync_path(dirpath)
     tmp_link = table_dir + ".__lnk__"
     if os.path.lexists(tmp_link):
         os.remove(tmp_link)
     os.symlink(os.path.basename(new_dir), tmp_link)
     os.replace(tmp_link, table_dir)  # the atomic commit point
+    _fsync_path(os.path.dirname(table_dir) or ".")
 
     if (
         old_target
@@ -424,10 +452,12 @@ def _hive_partition_cols(table_dir: str) -> list[str]:
 def _link_live_files(table_dir: str, new_dir: str) -> None:
     """Hard-link every file of the live version into ``new_dir``,
     mirroring subdirectories: data files (hive ``col=value/`` dirs
-    included), the ``_partitions.json`` sidecar and sink ``_epochs/``
-    markers, checksum files.  The live ``_SUCCESS`` (``new_dir`` has its
-    own) and hidden directories (sink epochs still staging) are
-    skipped."""
+    included), the ``_partitions.json`` sidecar, ``_epochs/`` markers,
+    side relations such as ``_hash_store/``, checksum files.  Carried
+    files keep their relative names, so a reader that listed the old
+    version still finds every file through the live path after the swap.
+    The live ``_SUCCESS`` (``new_dir`` has its own) and hidden (dot)
+    directories are skipped."""
     if not os.path.exists(table_dir):
         return  # first write creates the table
     real = os.path.realpath(table_dir.rstrip("/"))
@@ -438,6 +468,23 @@ def _link_live_files(table_dir: str, new_dir: str) -> None:
         for f in files:
             if f not in ("_SUCCESS", "._SUCCESS.crc"):
                 os.link(os.path.join(dirpath, f), os.path.join(dst, f))
+
+
+def _carry_side_state(src_dir: str, new_dir: str) -> None:
+    """Hard-link what a row rewrite does not write into its new
+    version: ``_``-prefixed table state such as sink ``_epochs/``
+    markers, side relations (``_hash_store/``) and ``_model_fp``.
+    Without it an UPDATE of a sink table dropped the markers, and the
+    next replay landed an epoch twice.  ``_SUCCESS`` is the writer's
+    own and ``_partitions.json`` is carry_disabled's."""
+    for name in os.listdir(src_dir):
+        if not name.startswith("_") or name in ("_SUCCESS", "_partitions.json"):
+            continue
+        src, dst = os.path.join(src_dir, name), os.path.join(new_dir, name)
+        if os.path.isdir(src):
+            shutil.copytree(src, dst, copy_function=os.link)
+        else:
+            os.link(src, dst)
 
 
 _MATCH = "__idb_match__"
@@ -459,9 +506,11 @@ def _observe_match(df: DataFrame, match: Column, obs) -> DataFrame:
 
 def insert_into(df: DataFrame, table_dir: str, codec: str | None = None,
                 lock_timeout: float = 60.0, notnull: list[str] = (),
-                stmt: str = "INSERT", _before_commit=None) -> int:
-    """INSERT / LOAD: returns the number of rows inserted
-    (≅ cpimport incremental load / ha_calpont_impl_write_row_).
+                stmt: str = "INSERT", partition_by: list[str] | None = None,
+                marker: str | None = None, side: dict | None = None,
+                _before_commit=None) -> int | None:
+    """INSERT / LOAD / streaming-sink epoch: returns the number of rows
+    inserted (≅ cpimport incremental load / ha_calpont_impl_write_row_).
 
     The rows are written ONCE into a pending version directory, pinned
     before its first byte lands so a crashed insert is collected by the
@@ -470,18 +519,33 @@ def insert_into(df: DataFrame, table_dir: str, codec: str | None = None,
     visible on error, and the source query never runs twice).  Then,
     under the commit lock, every file of the then-live version is
     hard-linked in and the pointer swapped — no existing file is
-    rewritten and the pre-image version is left untouched.  A
-    hive-partitioned table is staged with its layout
-    (_hive_partition_cols) so the link-in lands in the right ``col=value``
-    dirs.  ``_before_commit`` is a test hook run after staging, before
-    the commit lock."""
+    rewritten and the pre-image version is left untouched.  The rows
+    are laid out by ``partition_by``, else by the live table's hive
+    layout (_hive_partition_cols), so the link-in lands in the right
+    ``col=value`` dirs.
+
+    ``side`` maps table-relative directories to DataFrames staged into
+    the same version, so the one swap publishes them with the rows.
+    ``marker`` (a table-relative file) makes the insert idempotent: it
+    is created in the new version, and when the live version already
+    has it — checked before staging and again under the lock — the
+    insert is a replay, is skipped, and returns None.
+    ``_before_commit`` is a test hook run after staging, before the
+    commit lock."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    def replayed() -> bool:
+        return marker is not None and os.path.exists(os.path.join(table_dir, marker))
+
+    if replayed():
+        return None
     new_dir = _new_version_dir(table_dir)
     pin = _pin_version(table_dir, os.path.basename(new_dir))
     try:
-        cols = [c for c in _hive_partition_cols(table_dir) if c in df.columns]
+        cols = partition_by or [
+            c for c in _hive_partition_cols(table_dir) if c in df.columns
+        ]
         obs = Observation()
         counted = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         managed_writer(counted, "overwrite", codec, cols or None).parquet(new_dir)
@@ -494,14 +558,24 @@ def insert_into(df: DataFrame, table_dir: str, codec: str | None = None,
                     f"{stmt} into {os.path.basename(table_dir.rstrip('/'))!r}: "
                     f"{bad} row(s) violate NOT NULL ({', '.join(notnull)})"
                 )
+        for rel, side_df in (side or {}).items():
+            managed_writer(side_df, "overwrite", codec).parquet(os.path.join(new_dir, rel))
+        if marker is not None:
+            os.makedirs(os.path.dirname(os.path.join(new_dir, marker)), exist_ok=True)
+            open(os.path.join(new_dir, marker), "w").close()
         if _before_commit is not None:
             _before_commit()
         with _table_lock_wait(table_dir, stmt, lock_timeout):
+            if replayed():
+                return None  # a concurrent attempt committed it first
             live = os.path.basename(os.path.realpath(table_dir.rstrip("/")))
             _link_live_files(table_dir, new_dir)
             _chain_append(table_dir, live, os.path.basename(new_dir))
-            _swap(table_dir, new_dir)
-            new_dir = None
+            # cleared first: once _swap's replace has run, the version is
+            # live, and a later failure in _swap (an fsync, the GC) must
+            # not make the cleanup below delete it
+            pending, new_dir = new_dir, None
+            _swap(table_dir, pending)
             # unpin under the lock: the pending version is live now, and
             # a later insert's _chain_append must never see this pin
             _unpin(pin)
@@ -511,6 +585,24 @@ def insert_into(df: DataFrame, table_dir: str, codec: str | None = None,
         if new_dir:
             shutil.rmtree(new_dir, ignore_errors=True)
         _unpin(pin)
+
+
+def commit_relinked(table_dir: str, op: str, edit) -> None:
+    """Commit a file-level change without rewriting rows: under the
+    commit lock, hard-link every live file into a new version, let
+    ``edit(new_dir)`` add or remove files there (the version is still
+    private), and swap.  A crash before the swap leaves an unpinned
+    orphan that the next writer's sweep collects."""
+    with _table_lock_wait(table_dir, op):
+        new_dir = _new_version_dir(table_dir)
+        try:
+            os.makedirs(new_dir)
+            _link_live_files(table_dir, new_dir)
+            edit(new_dir)
+        except BaseException:
+            shutil.rmtree(new_dir, ignore_errors=True)
+            raise
+        _swap(table_dir, new_dir)
 
 
 def assign_auto_increment(df: DataFrame, col: str, start: int) -> DataFrame:
@@ -923,10 +1015,7 @@ def alter_table(
                 action["column"], F.lit(None).cast(action["type"])
             )
             new_dir = _new_version_dir(table_dir)
-            os.makedirs(new_dir)
-            for f in os.listdir(real):
-                if not f.startswith(("_", ".")):
-                    os.link(os.path.join(real, f), os.path.join(new_dir, f))
+            _link_live_files(table_dir, new_dir)
             managed_writer(widened, "append", codec).parquet(new_dir)
             _swap(table_dir, new_dir)
             return
@@ -960,6 +1049,7 @@ def alter_table(
             raise ValueError(f"unknown ALTER action {op!r}")
         new_dir = _new_version_dir(table_dir)
         _rewrite_writer(out, codec, table_dir).parquet(new_dir)
+        _carry_side_state(real, new_dir)
         _swap(table_dir, new_dir)
 
 
@@ -1097,11 +1187,11 @@ def _snapshot(table_dir: str) -> tuple[str, str, dict[str, tuple[int, int]]]:
     """(resolved version dir, content token, per-file identity map).
 
     The token hashes the file SET (relative names + sizes + mtimes),
-    not just the version basename: the streaming sink links epoch files
-    into the SAME version directory, so basename equality alone would
-    let a rewrite silently drop freshly-linked rows.  mtime_ns in the
-    identity guards the pathological same-name-same-size rewrite,
-    including an in-place edit by an external tool.
+    not just the version basename: the ``_partitions.json`` sidecar is
+    rewritten in place (ENABLE/DISABLE PARTITIONS), and a file added,
+    removed or edited in a version by an external tool must invalidate
+    a snapshot too.  mtime_ns in the identity guards the pathological
+    same-name-same-size rewrite.
 
     The conflict path diffs two identity maps ``{relpath: (size,
     mtime_ns)}`` so it reads only CHANGED files, never the whole
@@ -1326,14 +1416,15 @@ def _optimistic_rewrite(
             _rewrite_writer(out, codec, table_dir).parquet(new_dir)
             n = obs.get["rows"]
             carry_disabled(table_dir, new_dir)
+            _carry_side_state(snap_dir, new_dir)
             if _before_commit is not None:
                 hook, _before_commit = _before_commit, None
                 hook()
             with _table_lock_wait(table_dir, op, lock_timeout):
-                cur_dir, cur_token, _ = _snapshot(table_dir)
+                cur_dir, cur_token, cur_entries = _snapshot(table_dir)
                 if cur_token == token:
-                    _swap(table_dir, new_dir)
-                    new_dir = None
+                    pending, new_dir = new_dir, None  # see insert_into
+                    _swap(table_dir, pending)
                     return n
                 # pin the winner's version UNDER the lock so its files
                 # survive a third writer's swap-GC while we diff
@@ -1359,21 +1450,15 @@ def _optimistic_rewrite(
             # N-file table costs O(changed), not two full-table set
             # differences.
             if os.path.realpath(base_dir) == os.path.realpath(cur_dir):
-                # the winner only APPENDED (an INSERT chained onto our
-                # pin, or sink epoch files linked into our version).
-                # New rows are phantoms under snapshot isolation, never
-                # a write-write conflict — rebase over them.
+                # the winner only APPENDED (INSERTs and sink epochs
+                # chained onto our pin).  New rows are phantoms under
+                # snapshot isolation, never a write-write conflict —
+                # rebase over them.
                 overlap = 0
             else:
-                # re-walk BOTH dirs at diff time: the PIN-time identity
-                # map can miss a file the streaming sink linked into
-                # the snapshot dir after pinning — its rows would then
-                # show up only on the winner's side and abort what is
-                # really a rebase-able phantom
-                _, _, old_now = _snapshot(base_dir)
-                _, _, cur_now = _snapshot(cur_dir)
                 overlap = _overlap_on_changed_files(
-                    spark, base_dir, old_now, cur_dir, cur_now, select
+                    spark, base_dir, _snapshot(base_dir)[2], cur_dir,
+                    cur_entries, select,
                 )
             if overlap:
                 raise ConcurrentWriteConflict(

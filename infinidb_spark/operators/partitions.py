@@ -231,7 +231,9 @@ def drop_partitions(table_dir: str, parts: str | list) -> str:
     (`ha_calpont_partition.cpp:831`).  Zero bytes copied.  Takes the
     table lock: an unlocked drop racing a concurrent DML rewrite would
     be resurrected by the DML's later swap (lost drop)."""
-    from infinidb_spark.operators.dml import _new_version_dir, _swap, _table_lock
+    from infinidb_spark.operators.dml import (
+        _carry_side_state, _new_version_dir, _swap, _table_lock,
+    )
 
     with _table_lock(table_dir, "DROP PARTITIONS"):
         real = _real(table_dir)
@@ -259,6 +261,7 @@ def drop_partitions(table_dir: str, parts: str | list) -> str:
         survivors = {"disabled": sorted(set(state["disabled"]) & set(keep))}
         if survivors["disabled"]:
             _write_sidecar(new_dir, survivors)
+        _carry_side_state(real, new_dir)
         _swap(table_dir, new_dir)
     return "Partitions are dropped successfully"
 

@@ -1834,7 +1834,7 @@ class InfiniSession:
                 other_df = self.tables[other_name]
             else:
                 other_df = self.spark.table(other_name)
-            where = F.expr(st["where"]) if st.get("where") else None
+            where = F.expr(st["where"]) if st["where"] is not None else None
             codec = self._table_meta.get(st["table"], {}).get("codec")
             jt = st.get("join_type", "inner")
             if st["kind"] == "update_join":
@@ -2034,13 +2034,14 @@ class InfiniSession:
             n = update_table(
                 self.spark,
                 path,
-                F.expr(st["where"] or "true"),
+                F.expr("true" if st["where"] is None else st["where"]),
                 {c: F.expr(e) for c, e in st["assignments"].items()},
                 codec=self._table_meta.get(st["table"], {}).get("codec"),
             )
         elif st["kind"] == "delete":
             n = delete_from(
-                self.spark, path, F.expr(st["where"] or "true"),
+                self.spark, path,
+                F.expr("true" if st["where"] is None else st["where"]),
                 codec=self._table_meta.get(st["table"], {}).get("codec"),
             )
         else:

@@ -25,7 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from infinidb_spark.operators.dml import _new_version_dir, _swap
+from infinidb_spark.operators.dml import _carry_side_state, _new_version_dir, _swap
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
@@ -247,5 +247,6 @@ def compact_table(
         # without this, OPTIMIZE silently and permanently destroyed
         # out-of-service data (_swap GCs the old version dir)
         carry_disabled(table_dir, new_dir)
+        _carry_side_state(real, new_dir)
         _swap(table_dir, new_dir)
     return table_file_stats(table_dir)[0]

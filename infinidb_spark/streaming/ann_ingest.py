@@ -9,9 +9,9 @@ id — each IVF posting list is a hive partition, so serving reads ONLY
 the probed partitions (partition-pruned scan; the IVF cell ≅ the
 reference's extent with casual-partition min/max,
 `dbcon/joblist/lbidlist.h:80`).  Epochs land through the same
-idempotent protocol as every other stream sink (streaming/sink.py), so
-a replayed micro-batch re-links identical files and is skipped once
-its marker exists.
+idempotent protocol as every other stream sink (streaming/sink.py): one
+pointer swap per micro-batch, and a replayed micro-batch is skipped
+once its marker is live.
 
 The incremental contract: INGEST NEVER RETRAINS.  The centroid model
 is fixed at ingest time (the offline-training artifact); assignment is
@@ -37,7 +37,8 @@ from infinidb_spark.operators.similarity import (
     ivf_assign_expr,
     ivf_probe_ids,
 )
-from infinidb_spark.streaming.sink import read_committed, stream_to_table
+from infinidb_spark.operators.dml import commit_relinked
+from infinidb_spark.streaming.sink import hadoop_glob_escape, stream_to_table
 
 _MODEL_FP = "_model_fp"
 
@@ -74,19 +75,15 @@ def _check_model_fp(index_dir: str, centroids, *, record: bool) -> None:
             )
         return
     if record:
-        # same durability bar as the sink's commit markers: a power
-        # loss that keeps the (fsynced) epochs but drops this pin would
-        # let a later serve with retrained centroids pass the absent-fp
-        # check and silently return wrong neighbors
-        from infinidb_spark.streaming.sink import _fsync_path
+        # committed as a new version of the index (durable with the
+        # swap): a power loss that keeps the epochs but drops this pin
+        # would let a later serve with retrained centroids pass the
+        # absent-fp check and silently return wrong neighbors
+        def write_fp(new_dir: str) -> None:
+            with open(os.path.join(new_dir, _MODEL_FP), "w") as fh:
+                fh.write(fp)
 
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(fp)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, path)
-        _fsync_path(index_dir)
+        commit_relinked(index_dir, "MODEL", write_fp)
 
 
 def stream_ann_ingest(
@@ -138,10 +135,13 @@ def ann_index_serve(
     probed partitions.  The ``cid IN probes`` filter hits the hive
     partition column, so the scan never touches unprobed posting lists.
 
-    Serve-while-ingest safe: only COMMITTED epochs are read
-    (streaming/sink.py read_committed), so a query racing the epoch
-    linker sees pre- or post-epoch state, never a torn one; an index
-    with no committed epoch yet serves an empty result, not a crash.
+    Serve-while-ingest safe: the probed ``cid=`` partition directories
+    are read through the live path, and an epoch commit swaps one
+    pointer, so a query racing the ingest sees pre- or post-epoch
+    state, never part of an epoch.  Carried files keep their relative
+    names, so a listed query still reads after a later epoch's swap.
+    An index with no committed epoch yet serves an empty result, not a
+    crash.
 
     Returns (id, cosine) — identical, row for row, to batch
     ``ann_ivf_topk`` over the same corpus and model: the streamed index
@@ -150,16 +150,22 @@ def ann_index_serve(
     _check_model_fp(index_dir, centroids, record=False)
     probes = ivf_probe_ids(q, centroids, n_probe)
     qcol = F.array(*[F.lit(x) for x in q])
-    # walk ONLY the probed posting-list partitions: a full-index walk
-    # made per-query driver cost O(total files), not O(probed)
-    idx = read_committed(
-        spark, index_dir, only_dirs=[f"cid={p}" for p in probes]
-    )
-    if idx is None:
+    # list ONLY the probed posting-list partitions: a full-index
+    # listing made per-query driver cost O(total files), not O(probed)
+    dirs = [
+        d for d in (os.path.join(index_dir, f"cid={p}") for p in probes)
+        if os.path.isdir(d)
+    ]
+    if not dirs:
         # id_type keeps the pre-first-commit schema identical to the
         # committed-data path for non-long id columns (string ids are
         # legal elsewhere in the ANN family)
         return spark.createDataFrame([], f"{id_col} {id_type}, cosine double")
+    # basePath keeps the cid partition column (and its pruning) on an
+    # explicit directory list; it is compared literally, never globbed
+    idx = spark.read.option("basePath", index_dir).parquet(
+        *(hadoop_glob_escape(d) for d in dirs)
+    )
     return (
         idx.filter(F.col("cid").isin(probes))
         .select(

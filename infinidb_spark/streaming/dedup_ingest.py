@@ -8,16 +8,17 @@ closest pattern is nightly cpimport + a dedup pass; here it is one
 continuously-running query with bounded per-epoch work.
 
 Store layout: ``<table_dir>/_hash_store/`` — a Parquet relation of
-``(content_hash)`` appended per epoch through the SAME idempotent-epoch
-protocol as the row data (streaming/sink.py), so a replayed epoch
-re-lands identical files and is skipped once its marker exists.
+``(content_hash)`` inside the table's version directory.  Each epoch is
+one ``insert_into`` (operators/dml.py) that stages the corpus rows, the
+epoch's hashes under ``_hash_store/`` and the epoch's commit marker in
+the same pending version, so one pointer swap publishes all three.
 
-Replay safety around the store: the sink protocol links part files
-BEFORE the commit marker, so a crash mid-epoch can leave partial
-current-epoch hash files in the store.  Classification therefore reads
-the store EXCLUDING files of the epoch being (re)written — otherwise a
-replayed batch would classify its own half-committed hashes as corpus
-dups and silently drop the docs.
+Replay safety around the store: the store a classification reads is
+always the live one, and the live version holds either all of an epoch
+(rows, hashes and marker) or none of it.  A crash before the swap
+leaves nothing visible, so a replayed batch classifies against exactly
+the prior epochs; a replay after the swap finds the marker and is
+skipped.
 
 At 100 TB: per-epoch work is O(batch) — the batch is hashed and
 shuffle-joined against the store on the hash column; the store carries
@@ -30,14 +31,16 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from infinidb_spark.operators.dedup import dedup_exact_incremental
+from infinidb_spark.operators.dml import commit_relinked
 from infinidb_spark.streaming.sink import (
-    epoch_prefix,
+    hadoop_glob_escape,
     sink_id_for,
     start_epoch_stream,
     write_epoch_idempotent,
@@ -46,23 +49,20 @@ from infinidb_spark.streaming.sink import (
 _STORE_DIR = "_hash_store"
 
 
-def read_hash_store(
-    spark: SparkSession, table_dir: str, exclude_prefix: str | None = None
-) -> DataFrame:
-    """The accumulated (content_hash) relation; empty-schema relation
-    before the first epoch.  ``exclude_prefix`` drops files of the
-    epoch currently being written (replay-safety, module docstring)."""
-    store = os.path.join(table_dir, _STORE_DIR)
+def _store_files(table_dir: str) -> list[str]:
     # glob.escape: a table path containing glob metacharacters ([, *, ?)
     # would otherwise match nothing — an always-empty hash store means
     # every batch classifies as "new" and duplicates land silently
-    files = sorted(glob.glob(os.path.join(glob.escape(store), "*.parquet")))
-    if exclude_prefix:
-        files = [f for f in files if not os.path.basename(f).startswith(exclude_prefix)]
+    store = os.path.join(table_dir, _STORE_DIR)
+    return sorted(glob.glob(os.path.join(glob.escape(store), "*.parquet")))
+
+
+def read_hash_store(spark: SparkSession, table_dir: str) -> DataFrame:
+    """The accumulated (content_hash) relation; empty-schema relation
+    before the first epoch."""
+    files = _store_files(table_dir)
     if not files:
         return spark.createDataFrame([], "content_hash string")
-    from infinidb_spark.streaming.sink import hadoop_glob_escape
-
     # Spark's reader globs each path again JVM-side — escape those too
     return spark.read.parquet(*(hadoop_glob_escape(f) for f in files))
 
@@ -72,45 +72,38 @@ def compact_hash_store(spark: SparkSession, table_dir: str) -> int:
 
     The store gains at least one parquet file per epoch forever, so a
     long-running stream's every micro-batch pays O(epochs) listing/open
-    cost to classify — this maintenance hook restores O(1).  Run while
-    the ingest is PAUSED (same contract as sink.vacuum_sink_table): a
-    concurrent classify could read a file mid-delete.  Epoch commit
-    MARKERS are kept, so a checkpoint replay of an already-compacted
-    epoch still skips (and if it ever re-landed, the store read
-    dropDuplicates the hashes anyway).  Returns the number of files
-    replaced."""
-    store = os.path.join(table_dir, _STORE_DIR)
-    files = sorted(glob.glob(os.path.join(glob.escape(store), "*.parquet")))
+    cost to classify — this maintenance hook restores O(1).  The
+    compacted store is committed as a new version of the table
+    (commit_relinked): corpus files and epoch markers are carried, so a
+    checkpoint replay of an already-compacted epoch still skips.  Run
+    while the ingest is PAUSED: a classification listed before the swap
+    would look for store files the new version no longer has.  Returns
+    the number of files replaced."""
+    files = _store_files(table_dir)
     if len(files) <= 1:
         return 0
-    from infinidb_spark.streaming.sink import _fsync_path, hadoop_glob_escape
 
-    df = spark.read.parquet(
-        *(hadoop_glob_escape(f) for f in files)
-    ).dropDuplicates(["content_hash"])
-    tmp = os.path.join(store, ".compact_tmp")
-    import shutil
+    def compact(new_dir: str) -> None:
+        store = os.path.join(new_dir, _STORE_DIR)
+        shutil.rmtree(store)
+        tmp = os.path.join(store, ".compact_tmp")
+        spark.read.parquet(
+            *(hadoop_glob_escape(f) for f in files)
+        ).dropDuplicates(["content_hash"]).coalesce(1).write.parquet(tmp)
+        parts = glob.glob(os.path.join(glob.escape(tmp), "part-*.parquet"))
+        if len(parts) != 1:
+            raise RuntimeError(f"expected one compacted part, found {len(parts)}")
+        gen = 1 + max(
+            (int(os.path.basename(f)[10:-8])
+             for f in files
+             if os.path.basename(f).startswith("compacted_")
+             and os.path.basename(f)[10:-8].isdigit()),
+            default=0,
+        )
+        os.replace(parts[0], os.path.join(store, f"compacted_{gen:06d}.parquet"))
+        shutil.rmtree(tmp)
 
-    shutil.rmtree(tmp, ignore_errors=True)
-    df.coalesce(1).write.parquet(tmp)
-    parts = glob.glob(os.path.join(glob.escape(tmp), "part-*.parquet"))
-    if len(parts) != 1:
-        raise RuntimeError(f"expected one compacted part, found {len(parts)}")
-    gen = 1 + max(
-        (int(os.path.basename(f)[10:-8])
-         for f in files
-         if os.path.basename(f).startswith("compacted_")
-         and os.path.basename(f)[10:-8].isdigit()),
-        default=0,
-    )
-    dst = os.path.join(store, f"compacted_{gen:06d}.parquet")
-    os.replace(parts[0], dst)
-    _fsync_path(dst)
-    _fsync_path(store)
-    shutil.rmtree(tmp, ignore_errors=True)
-    for f in files:
-        os.remove(f)
-    _fsync_path(store)
+    commit_relinked(table_dir, "COMPACT", compact)
     return len(files)
 
 
@@ -125,9 +118,7 @@ def stream_dedup_ingest(
     """Continuously ingest a document stream, landing only docs whose
     normalized content was never seen in ANY prior epoch (or earlier in
     the same batch — lowest id wins)."""
-    os.makedirs(table_dir, exist_ok=True)
     sink_id = sink_id_for(checkpoint_dir)
-    store_dir = os.path.join(table_dir, _STORE_DIR)
     # 'content_hash' would be silently CLOBBERED by the ingest's own
     # hash projection (then dropped — user data lost); the join aliases
     # would fail later with an opaque ambiguity.  Reject up front, the
@@ -149,12 +140,7 @@ def stream_dedup_ingest(
         spark = batch_df.sparkSession
         from infinidb_spark.operators.dedup import normalize_text
 
-        # THE shared spelling (sink.epoch_prefix) — a hand-rolled
-        # copy that drifted from the writer's prefix would stop
-        # excluding the current epoch's partial store files on
-        # replay, making the batch's own docs classify as dups
-        prefix = epoch_prefix(sink_id, epoch_id)
-        store = read_hash_store(spark, table_dir, exclude_prefix=prefix)
+        store = read_hash_store(spark, table_dir)
         # persist the HASHED batch and derive both the classification
         # and the join-back from it: normalize+sha2 runs once per epoch
         # (hash_col tells dedup_exact_incremental to reuse it), and the
@@ -189,12 +175,9 @@ def stream_dedup_ingest(
                 .dropDuplicates(["content_hash"])
                 .drop("content_hash")
             )
-            write_epoch_idempotent(fresh, epoch_id, table_dir, sink_id=sink_id)
             write_epoch_idempotent(
-                classified.select("content_hash").distinct(),
-                epoch_id,
-                store_dir,
-                sink_id=sink_id,
+                fresh, epoch_id, table_dir, sink_id=sink_id,
+                side={_STORE_DIR: classified.select("content_hash").distinct()},
             )
         finally:
             classified.unpersist()

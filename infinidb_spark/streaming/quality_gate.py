@@ -13,10 +13,10 @@ syntax errors to content-quality rules.
 
 Exactly-once: both relations land through the idempotent-epoch
 protocol (streaming/sink.py write_epoch_idempotent) under ONE sink id.
-Idempotence is per relation: a crash between the two writes leaves the
-epoch committed in one table only, and the replay re-lands just the
-missing side (markers skip the committed one) — both tables converge
-to exactly-once.
+Each relation is its own table with its own marker: a crash between the
+two commits leaves the epoch committed in one table only, and the
+replay re-lands just the missing side (its marker skips the committed
+one) — both tables converge to exactly-once.
 
 At 100 TB: the gate is MAP-ONLY (scoring expressions are codegen'd
 per row, the split is two filters over one scored projection) — no
@@ -33,7 +33,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from infinidb_spark.operators.text import lang_id, quality_score
 from infinidb_spark.streaming.sink import (
-    read_committed,
+    _EPOCH_DIR,
+    hadoop_glob_escape,
     sink_id_for,
     start_epoch_stream,
     write_epoch_idempotent,
@@ -98,8 +99,6 @@ def stream_quality_gate(
     """Continuously gate a document stream into ``<table_dir>/accepted``
     (docs + scores) and ``<table_dir>/rejects`` (ids + failing rule +
     scores)."""
-    os.makedirs(os.path.join(table_dir, ACCEPTED_DIR), exist_ok=True)
-    os.makedirs(os.path.join(table_dir, REJECTS_DIR), exist_ok=True)
     sink_id = sink_id_for(checkpoint_dir)
 
     def _gate_epoch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -133,13 +132,18 @@ def read_gate_results(
     """Audit view over both relations: (id, status, quality,
     lang_guess) — 'accepted' rows from the corpus table, reject rows
     with their failing rule.  ``id_col`` must match the one the gate
-    was started with (stream_quality_gate parameterizes it).  Reads
-    COMMITTED epochs only (sink.read_committed): the epoch protocol
-    links files before the marker, so a raw read racing the linker —
-    serve-while-ingest with available_now=False — could see a torn
-    micro-batch.  Returns None before any epoch commits."""
-    acc = read_committed(spark, os.path.join(table_dir, ACCEPTED_DIR))
-    rej = read_committed(spark, os.path.join(table_dir, REJECTS_DIR))
+    was started with (stream_quality_gate parameterizes it).  Each
+    table is read through its live path: an epoch commit swaps one
+    pointer, so a read racing the ingest sees whole epochs only.
+    Returns None before any epoch commits."""
+
+    def committed(name: str) -> DataFrame | None:
+        d = os.path.join(table_dir, name)
+        if not os.path.isdir(os.path.join(d, _EPOCH_DIR)):
+            return None
+        return spark.read.parquet(hadoop_glob_escape(d))
+
+    acc, rej = committed(ACCEPTED_DIR), committed(REJECTS_DIR)
     if acc is not None:
         acc = acc.select(
             id_col, F.lit("accepted").alias("status"), "quality", "lang_guess"

@@ -2,50 +2,38 @@
 
 The reference's closest pattern is the dwweek scenario: nightly cpimport
 batches interleaved with queries (`utils/scenarios/dwweek/testcase/
-dwDMrun.sh`).  Structured Streaming collapses that operational pattern
-into one continuously-running query: file source → transform →
-`foreachBatch` append into the same Parquet layout batch queries scan.
+dwDMrun.sh`), each load published through the one BRM commit.
+Structured Streaming collapses that operational pattern into one
+continuously-running query: file source → transform → `foreachBatch`
+append into the same Parquet layout batch queries scan.
 
 Exactly-once: the checkpoint pins which source files each epoch
 consumed; the writer below makes the table-side append idempotent BY
-EPOCH — a replayed epoch (restart after crash) lands the same
-deterministic file names and is skipped once its commit marker exists,
-so the combination is effective exactly-once end to end.  At cluster
-scale the sink directory is the same partitioned/clustered layout
-`sources/table_write.py` produces, so the streamed table serves the
-SAME query corpus as a batch-loaded one — stream/batch storage parity.
+EPOCH.  Each epoch is an ``insert_into`` through the one commit protocol
+of operators/dml.py: its rows and its commit marker
+``_epochs/<sink_id>/<epoch_id>`` are staged in one pinned pending
+version, and one pointer swap publishes both.  A replayed epoch (restart
+after a crash) finds its marker in the live version and is skipped; a
+crash before the swap leaves only an orphan version that the next
+writer's sweep collects, so readers never see part of an epoch and need
+no filter.  At cluster scale the sink directory is the same
+partitioned/clustered layout `sources/table_write.py` produces, so the
+streamed table serves the SAME query corpus as a batch-loaded one —
+stream/batch storage parity.
 """
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from infinidb_spark.operators.dml import insert_into
+
 #: commit-marker directory inside the table (underscore prefix →
 #: invisible to Spark's Parquet reader, like _SUCCESS)
 _EPOCH_DIR = "_epochs"
-
-
-def epoch_prefix(sink_id: str, epoch_id: int) -> str:
-    """THE epoch file-name prefix — the single spelling shared by the
-    writer, the replay sweep, and dedup_ingest's hash-store exclusion
-    (three independent copies had already been spelled by hand; a
-    drift in any one silently breaks replay safety in another)."""
-    return f"ep_{sink_id}_{epoch_id}_"
-
-
-def _fsync_path(path: str) -> None:
-    """fsync a file or directory by path (directory fsync persists the
-    directory ENTRIES — the link/marker names themselves)."""
-    fd = os.open(path, os.O_RDONLY)
-    try:
-        os.fsync(fd)
-    finally:
-        os.close(fd)
 
 
 def write_epoch_idempotent(
@@ -54,6 +42,7 @@ def write_epoch_idempotent(
     table_dir: str,
     partition_by: list[str] | None = None,
     sink_id: str | None = None,
+    side: dict[str, DataFrame] | None = None,
 ) -> bool:
     """Append one epoch's rows with replay safety; returns False when
     the epoch was already committed (skipped).
@@ -67,18 +56,12 @@ def write_epoch_idempotent(
     query id (stable across restarts FROM THE SAME CHECKPOINT, new for
     a new checkpoint — exactly the replay-vs-new boundary).
 
-    Protocol: stage the epoch to a dot-directory (hidden from readers),
-    remove any partial `ep<id>_*` files from a previous attempt, link
-    the staged parts in under DETERMINISTIC epoch-prefixed names, then
-    write the commit marker last.  Every crash window replays to the
-    same final state:
-
-    * crash while staging      → replay re-stages (stale staging dirs
-      are overwritten by name);
-    * crash while linking      → replay deletes the partial epoch files
-      and re-links;
-    * crash after the marker   → replay skips the epoch entirely.
-    """
+    The epoch is one ``insert_into`` (operators/dml.py) with the marker
+    staged inside the new version; ``side`` maps table-relative
+    directories to relations published by the same swap (the dedup
+    ingest's hash store).  Every crash window replays to the same final
+    state: before the swap nothing is visible and the replay lands the
+    epoch; after it the marker is live and the replay skips."""
     if sink_id is None:
         # foreachBatch batch_df is a normal DataFrame; the enclosing
         # streaming query's id is reachable via the active session
@@ -97,179 +80,19 @@ def write_epoch_idempotent(
                 "explicitly (sink_id_for(checkpoint_dir))"
             )
     if partition_by and any(c.startswith(("_", ".")) for c in partition_by):
-        # read_committed (and Spark's own partition discovery) prune
-        # '_'/'.'-prefixed directories — a commit under such a layout
-        # would be invisible to the module's own reader
+        # Spark's partition discovery prunes '_'/'.'-prefixed
+        # directories — a commit under such a layout would be invisible
+        # to every reader of the table
         raise ValueError(
             "write_epoch_idempotent: partition column names must not "
             f"start with '_' or '.': {partition_by}"
         )
     safe = str(sink_id).replace(os.sep, "_")
-    marker = os.path.join(table_dir, _EPOCH_DIR, safe, str(epoch_id))
-    if os.path.exists(marker):
-        return False
-    stage = os.path.join(table_dir, f".epoch_{safe}_{epoch_id}_tmp")
-    from infinidb_spark.operators.dml import managed_writer
-
-    # stream/batch storage parity through the shared write chokepoint
-    # (char-null semantics + partitioning, operators/dml.py)
-    managed_writer(batch_df, "overwrite", partition_by=partition_by).parquet(stage)
-
-    # Clear a previous partial attempt, then link.  Part names carry a
-    # fresh writer uuid per attempt, so the sweep is what makes replay
-    # idempotent.  Scoped to the partition dirs the JUST-STAGED output
-    # contains (checkpoint replay regenerates the same batch, hence the
-    # same partitions): per-epoch cost tracks the epoch's own files,
-    # not total table size — the old recursive table-wide glob made a
-    # long-running stream's ingest O(total files) per micro-batch.
-    # glob.escape keeps metacharacter table paths from matching nothing
-    # (which would silently leave the stale attempt in place).
-    prefix = epoch_prefix(safe, epoch_id)
-    sweep_dirs = {table_dir}
-    for dirpath, _, files in os.walk(stage):
-        rel = os.path.relpath(dirpath, stage)
-        if rel != "." and any(f.endswith(".parquet") for f in files):
-            sweep_dirs.add(os.path.join(table_dir, rel))
-    for d in sweep_dirs:
-        # the 'part-' anchor scopes the sweep to THIS sink's files:
-        # bare '{prefix}*' also matched a sibling sink whose id starts
-        # with this sink's id plus '_' ('ep_a_1_*' caught sink a_1's
-        # committed 'ep_a_1_2_part-…' while sweeping sink a's epoch 1 —
-        # silent cross-sink data loss).  glob.escape covers metachars
-        # in the sink id itself, not just the directory.
-        for old in glob.glob(
-            glob.escape(os.path.join(d, prefix)) + "part-*"
-        ):
-            os.remove(old)
-    linked_dirs = set()
-    for dirpath, _, files in os.walk(stage):
-        rel = os.path.relpath(dirpath, stage)
-        for f in files:
-            if not f.endswith(".parquet"):
-                continue
-            dst_dir = table_dir if rel == "." else os.path.join(table_dir, rel)
-            os.makedirs(dst_dir, exist_ok=True)
-            dst = os.path.join(dst_dir, f"{prefix}{f}")
-            os.link(os.path.join(dirpath, f), dst)
-            # flush the part data BEFORE the marker: the exactly-once
-            # protocol rests on marker-written-last, which process
-            # crashes respect but an OS crash/power loss does not
-            # without fsync
-            _fsync_path(dst)
-            linked_dirs.add(dst_dir)
-    # fsync every linked dir AND its ancestors up to table_dir: a
-    # NEWLY-CREATED partition directory's entry lives in its parent,
-    # and without the ancestor fsyncs a power loss could persist the
-    # commit marker while losing a whole partition's directory entry —
-    # permanent silent data loss that replay then skips
-    _fsync_up_to(linked_dirs, table_dir)
-    shutil.rmtree(stage)
-    os.makedirs(os.path.dirname(marker), exist_ok=True)
-    with open(marker, "w") as mf:
-        mf.flush()
-        os.fsync(mf.fileno())
-    # marker dir entries need the same ancestor durability (the first
-    # marker of a sink creates _epochs/<sink>/ and maybe _epochs/)
-    _fsync_up_to({os.path.dirname(marker)}, table_dir)
-    return True
-
-
-def _fsync_up_to(dirs: set[str], table_dir: str) -> None:
-    """fsync each directory and every ancestor up to (and including)
-    ``table_dir`` — persisting the directory ENTRIES along the chain so
-    newly created partition/marker directories survive power loss."""
-    table_abs = os.path.abspath(table_dir)
-    synced: set[str] = set()
-    for d in dirs:
-        cur = os.path.abspath(d)
-        while cur not in synced:
-            _fsync_path(cur)
-            synced.add(cur)
-            if cur == table_abs:
-                break
-            parent = os.path.dirname(cur)
-            if parent == cur:
-                break
-            cur = parent
-
-
-def read_committed(
-    spark, table_dir: str, only_dirs: list[str] | None = None
-) -> DataFrame | None:
-    """Read a stream-sink table EXCLUDING uncommitted epochs.
-
-    ``only_dirs``: restrict the walk to these table-relative
-    subdirectories (plus root-level files) — a partition-pruned reader
-    (e.g. the ANN serve path probing 2 of 500 ``cid=`` partitions) must
-    not pay an O(total files) walk per query.
-
-    The epoch protocol links part files BEFORE the commit marker, so a
-    reader racing the linker (serve-while-ingest) could otherwise see a
-    TORN epoch — some of a micro-batch's files but not all.  This reads
-    only files whose epoch marker exists (``ep_<sink>_<epoch>_*`` with
-    a present ``_epochs/<sink>/<epoch>``); files not written by the
-    epoch protocol (batch appends) are always included, and staging /
-    metadata directories (dot or underscore prefixed) are skipped.
-
-    Returns ``None`` when no committed data exists yet — callers serve
-    an empty result instead of crashing on schema inference.  Reads use
-    ``basePath`` so hive-partition columns (and partition pruning)
-    survive the explicit file list."""
-    import re
-
-    # Snapshot the committed markers BEFORE walking the data files.
-    # The writer links files first and writes the marker LAST, so a
-    # marker present in this snapshot guarantees every one of its files
-    # was already linked when the walk starts.  Checking markers
-    # per-file DURING the walk (the old shape) raced the linker: an
-    # epoch committing mid-walk could surface with some partition dirs
-    # walked before its links landed and some after — a torn epoch,
-    # the exact state this function exists to prevent.  (The snapshot
-    # also replaces O(files) marker stats with one listing.)
-    committed: set[tuple[str, str]] = set()
-    ep_root = os.path.join(table_dir, _EPOCH_DIR)
-    if os.path.isdir(ep_root):
-        for sink in os.listdir(ep_root):
-            sdir = os.path.join(ep_root, sink)
-            if os.path.isdir(sdir):
-                committed.update((sink, e) for e in os.listdir(sdir))
-    if only_dirs is None:
-        roots = [table_dir]
-    else:
-        roots = [
-            os.path.join(table_dir, d)
-            for d in only_dirs
-            if os.path.isdir(os.path.join(table_dir, d))
-        ]
-        # root-level files (unpartitioned appends) still participate
-        roots.append(None)  # sentinel: list table_dir non-recursively
-    files: list[str] = []
-
-    def _keep(dirpath: str, f: str) -> None:
-        if not f.endswith(".parquet") or f.startswith((".", "_")):
-            return
-        m = re.match(r"ep_(.+)_(\d+)_part-", f)
-        if m and (m.group(1), m.group(2)) not in committed:
-            return
-        files.append(os.path.join(dirpath, f))
-
-    for root in roots:
-        if root is None:
-            for f in os.listdir(table_dir):
-                if os.path.isfile(os.path.join(table_dir, f)):
-                    _keep(table_dir, f)
-            continue
-        for dirpath, dirnames, fnames in os.walk(root):
-            dirnames[:] = [d for d in dirnames if not d.startswith((".", "_"))]
-            for f in fnames:
-                _keep(dirpath, f)
-    if not files:
-        return None
-    # basePath is compared as a literal path (never globbed) — only the
-    # file paths go through the Hadoop globber and need escaping
-    return spark.read.option("basePath", table_dir).parquet(
-        *(hadoop_glob_escape(f) for f in sorted(files))
-    )
+    marker = os.path.join(_EPOCH_DIR, safe, str(epoch_id))
+    return insert_into(
+        batch_df, table_dir, stmt="EPOCH", partition_by=partition_by,
+        marker=marker, side=side,
+    ) is not None
 
 
 def hadoop_glob_escape(path: str) -> str:
@@ -284,68 +107,6 @@ def hadoop_glob_escape(path: str) -> str:
     import re
 
     return re.sub(r"([\[\]{}*?\\])", r"\\\1", path)
-
-
-def vacuum_sink_table(table_dir: str, min_age_sec: float = 86400.0) -> list[str]:
-    """Reclaim abandoned epoch-attempt garbage: dot-staging directories
-    (``.epoch_<sink>_<n>_tmp``) and epoch-prefixed part files whose
-    commit marker does not exist, both untouched for ``min_age_sec``.
-
-    A stream that crashes mid-epoch and restarts with a FRESH
-    checkpoint gets a new sink id, so the writer's own replay sweep
-    never reclaims the dead sink's staging/uncommitted files — they are
-    correctly excluded by ``read_committed`` but occupy disk and
-    inflate every walk forever.  This is an EXPLICIT maintenance call,
-    not automatic: only age separates "abandoned" from "in-flight,
-    about to commit" (the writer links files BEFORE its marker), so the
-    default threshold is a day — far beyond any micro-batch.  Returns
-    the removed paths.  Analog of compact/cleanup maintenance in
-    operators/dml.py."""
-    import re
-    import time
-
-    cutoff = time.time() - min_age_sec
-    removed: list[str] = []
-    committed: set[tuple[str, str]] = set()
-    ep_root = os.path.join(table_dir, _EPOCH_DIR)
-    if os.path.isdir(ep_root):
-        for sink in os.listdir(ep_root):
-            sdir = os.path.join(ep_root, sink)
-            if os.path.isdir(sdir):
-                committed.update((sink, e) for e in os.listdir(sdir))
-    # stale staging dirs live directly under table_dir
-    for name in os.listdir(table_dir):
-        full = os.path.join(table_dir, name)
-        if (
-            name.startswith(".epoch_") and name.endswith("_tmp")
-            and os.path.isdir(full)
-        ):
-            try:
-                newest = max(
-                    (os.path.getmtime(os.path.join(dp, f))
-                     for dp, _, fs in os.walk(full) for f in fs),
-                    default=os.path.getmtime(full),
-                )
-            except OSError:
-                continue
-            if newest < cutoff:
-                shutil.rmtree(full, ignore_errors=True)
-                removed.append(full)
-    # uncommitted epoch part files anywhere in the data layout
-    for dirpath, dirnames, fnames in os.walk(table_dir):
-        dirnames[:] = [d for d in dirnames if not d.startswith((".", "_"))]
-        for f in fnames:
-            m = re.match(r"ep_(.+)_(\d+)_part-", f)
-            if not m or (m.group(1), m.group(2)) in committed:
-                continue
-            full = os.path.join(dirpath, f)
-            try:
-                if os.path.getmtime(full) < cutoff:
-                    os.remove(full)
-                    removed.append(full)
-            except OSError:
-                continue
-    return removed
 
 
 def sink_id_for(checkpoint_dir: str) -> str:

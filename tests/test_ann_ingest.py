@@ -103,30 +103,83 @@ def test_serving_empty_index_returns_empty(spark, built):
         shutil.rmtree(empty, ignore_errors=True)
 
 
-def test_serving_excludes_uncommitted_epoch(spark, built):
-    """A torn epoch (part files linked, commit marker not yet written)
-    must be invisible to serving — the reader sees pre-epoch state."""
-    clone = tempfile.mkdtemp(prefix="ann_torn_")
-    shutil.rmtree(clone)
-    shutil.copytree(built["index_dir"], clone)
-    try:
-        epochs_root = os.path.join(clone, "_epochs")
-        sink = os.listdir(epochs_root)[0]
-        markers = sorted(os.listdir(os.path.join(epochs_root, sink)), key=int)
-        os.remove(os.path.join(epochs_root, sink, markers[-1]))
-        from infinidb_spark.streaming.sink import read_committed
+def _clone_index(built):
+    """A private copy of the streamed index, its next epoch id and sink
+    id, and a 5-row batch of fresh vectors for that epoch."""
+    from infinidb_spark.operators.dml import _new_version_dir
 
-        visible = read_committed(spark, clone)
+    clone = os.path.join(tempfile.mkdtemp(prefix="ann_clone_"), "index")
+    version = _new_version_dir(clone)
+    shutil.copytree(built["index_dir"], version)
+    os.symlink(os.path.basename(version), clone)
+    (sink,) = os.listdir(os.path.join(clone, "_epochs"))
+    epoch = 1 + max(int(e) for e in os.listdir(os.path.join(clone, "_epochs", sink)))
+    return clone, sink, epoch
+
+
+def _extra_batch(spark, clone):
+    index = spark.read.parquet(clone)
+    rows = (
+        index.orderBy("vec_id").limit(5)
+        .withColumn("vec_id", F.col("vec_id") + 10**9).collect()
+    )
+    return spark.createDataFrame(rows, index.schema)
+
+
+def test_serving_excludes_uncommitted_epoch(spark, built, crash_before_swap):
+    """An epoch killed before its swap must be invisible to serving —
+    the reader sees pre-epoch state — and its replay lands it once."""
+    from infinidb_spark.streaming.sink import write_epoch_idempotent
+
+    clone, sink, epoch = _clone_index(built)
+    try:
         n_all = built["emb"].count()
-        n_vis = visible.count()
-        assert 0 < n_vis < n_all  # last epoch's rows excluded
-        # and serving still works over the committed prefix
+        extra = _extra_batch(spark, clone)
+        want = ann_index_serve(
+            spark, clone, _QUERY_VEC, built["centroids"], k=10, n_probe=2
+        ).collect()
+
+        def land():
+            return write_epoch_idempotent(
+                extra, epoch, clone, partition_by=["cid"], sink_id=sink
+            )
+
+        crash_before_swap(clone, land)
+        assert spark.read.parquet(clone).count() == n_all  # epoch excluded
         got = ann_index_serve(
             spark, clone, _QUERY_VEC, built["centroids"], k=10, n_probe=2
         ).collect()
-        assert len(got) <= 10
+        assert got == want
+        assert land() is True and land() is False
+        assert spark.read.parquet(clone).count() == n_all + 5
     finally:
-        shutil.rmtree(clone, ignore_errors=True)
+        shutil.rmtree(os.path.dirname(clone), ignore_errors=True)
+
+
+def test_serve_listed_before_epoch_commit_still_collects(spark, built):
+    """A serve DataFrame listed before an epoch commits still collects
+    after the swap has GC'd the version it listed: carried files keep
+    their relative names, and the listed paths resolve through the live
+    pointer."""
+    from infinidb_spark.streaming.sink import write_epoch_idempotent
+
+    clone, sink, epoch = _clone_index(built)
+    try:
+        extra = _extra_batch(spark, clone)
+        listed = ann_index_serve(
+            spark, clone, _QUERY_VEC, built["centroids"], k=10, n_probe=2
+        )
+        before = os.path.realpath(clone)
+        assert write_epoch_idempotent(
+            extra, epoch, clone, partition_by=["cid"], sink_id=sink
+        )
+        assert os.path.realpath(clone) != before and not os.path.exists(before)
+        want = ann_ivf_topk(
+            built["emb"], _QUERY_VEC, k=10, n_probe=2, centroids=built["centroids"]
+        ).collect()
+        assert [tuple(r) for r in listed.collect()] == [tuple(r) for r in want]
+    finally:
+        shutil.rmtree(os.path.dirname(clone), ignore_errors=True)
 
 
 def test_model_fingerprint_rejects_different_centroids(spark, built):

@@ -4,6 +4,8 @@ unsupported-index DDL rejection (`ha_calpont_ddl.cpp:1862`)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from infinidb_spark.dialect import DialectError
@@ -323,3 +325,33 @@ def test_dml_where_and_set_with_bit_ops(sess):
     assert n2 == 1  # only flags=2 shifts to 1 (5>>1=2, 7>>1=3)
     left = sorted(r.id for r in sess.execute("SELECT * FROM bm").collect())
     assert left == [1, 3]
+
+
+
+def _file_bytes(root):
+    out = {}
+    for dirpath, _, files in os.walk(os.path.realpath(root)):
+        for f in files:
+            with open(os.path.join(dirpath, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(dirpath, f), os.path.realpath(root))] = fh.read()
+    return out
+
+
+@pytest.mark.parametrize("stmt", [
+    "UPDATE m1 SET v = 0 WHERE",
+    "DELETE FROM m1 WHERE",
+    "DELETE FROM m1 WHERE /* nothing */",
+    "UPDATE m1 a JOIN region r ON a.id = r.r_regionkey SET a.v = 0 WHERE",
+    "DELETE a FROM m1 a JOIN region r ON a.id = r.r_regionkey WHERE",
+])
+def test_empty_where_is_a_syntax_error_and_writes_nothing(sess, stmt):
+    """A WHERE with no condition is MySQL's error 1064, never a filter
+    that matches every row: the statement is rejected before it runs and
+    the table's files are byte-identical afterwards."""
+    path = sess._managed["m1"]
+    before = (os.path.realpath(path), _file_bytes(path))
+    with pytest.raises(DialectError, match="WHERE"):
+        sess.execute(stmt)
+    assert sess.execute("SHOW ERRORS").collect()[0][1] == 1064
+    assert (os.path.realpath(path), _file_bytes(path)) == before
+    assert sess.execute("SELECT COUNT(*) FROM m1 WHERE v > 0").collect()[0][0] == 4

@@ -424,12 +424,50 @@ _VICTIMS = {
             open(MARKER, "w").close()
             time.sleep(600)
 
-        rows = spark.range(500, 510).select(
-            F.col("id").cast("bigint").alias("k"),
-            F.lit(0).cast("int").alias("grp"), F.lit(9).cast("int").alias("v"))
-        insert_into(rows, T, _before_commit=stall)
+        insert_into(EPOCH_ROWS(), T, _before_commit=stall)
+    """,
+    # a sink epoch's rows and marker staged, before the link-in and swap
+    "sink_before_swap": """
+        import infinidb_spark.operators.dml as dml
+        from infinidb_spark.streaming.sink import write_epoch_idempotent
+
+        locked = dml._table_lock_wait
+
+        def stall(table_dir, op, *a, **k):
+            if op == "EPOCH":
+                open(MARKER, "w").close()
+                time.sleep(600)
+            return locked(table_dir, op, *a, **k)
+
+        dml._table_lock_wait = stall
+        write_epoch_idempotent(EPOCH_ROWS(), 0, T, sink_id="s")
+    """,
+    # UPDATE swapped, before its pins are dropped and the stale version
+    # collected (the GC runs under a lock of its own, taken here)
+    "after_swap": """
+        import infinidb_spark.operators.dml as dml
+
+        locked = dml._table_lock_wait
+
+        def stall(table_dir, op, *a, **k):
+            if op == "GC":
+                open(MARKER, "w").close()
+                time.sleep(600)
+            return locked(table_dir, op, *a, **k)
+
+        dml._table_lock_wait = stall
+        update_table(spark, T, F.col("k") < 50, {"v": F.lit(9)})
     """,
 }
+
+#: the rows the ``insert_before_link`` and ``sink_before_swap`` victims
+#: add, and the sink's replay lands
+_EPOCH_ROWS = """
+    def EPOCH_ROWS():
+        return spark.range(500, 510).select(
+            F.col("id").cast("bigint").alias("k"),
+            F.lit(0).cast("int").alias("grp"), F.lit(9).cast("int").alias("v"))
+"""
 
 
 def test_writer_killed_before_commit_is_garbage_collected(spark, tmp_path):
@@ -446,7 +484,10 @@ def test_writer_killed_before_commit_is_garbage_collected(spark, tmp_path):
 )
 def test_writer_killed_mid_statement_is_garbage_collected(spark, tmp_path, kill_point):
     """The same recovery for the other kill points: inside the UPDATE's
-    Parquet write, and with an INSERT's rows staged before the link-in."""
+    Parquet write, with an INSERT's rows or a sink epoch staged before
+    the link-in, and after an UPDATE's swap before its GC (the table
+    then reads back as the exact post-image).  A killed sink epoch is
+    replayed once it has been collected, and lands exactly once."""
     _kill_writer_and_check_recovery(spark, tmp_path, kill_point)
 
 
@@ -458,7 +499,12 @@ def _kill_writer_and_check_recovery(spark, tmp_path, kill_point):
     import time as _time
 
     t = _mk_table(spark, tmp_path, n=200)
-    pre_image = sorted(read_table(spark, t).collect())
+    # the table must read back as its pre-image, or as the victim's
+    # post-image when the kill came after the swap
+    image = sorted(tuple(r) for r in read_table(spark, t).collect())
+    committed = kill_point == "after_swap"
+    if committed:  # the victim's UPDATE sets v = 9 where k < 50
+        image = sorted((k, g, 9 if k < 50 else v) for k, g, v in image)
     marker = str(tmp_path / "at_kill_point")
 
     child_src = textwrap.dedent(f"""
@@ -469,7 +515,7 @@ def _kill_writer_and_check_recovery(spark, tmp_path, kill_point):
         spark = get_spark("victim", cpus=2)
         spark.sparkContext.setLogLevel("ERROR")
         T, MARKER = {t!r}, {marker!r}
-    """) + textwrap.dedent(_VICTIMS[kill_point])
+    """) + textwrap.dedent(_EPOCH_ROWS) + textwrap.dedent(_VICTIMS[kill_point])
     proc = subprocess.Popen(
         [sys.executable, "-c", child_src],
         cwd=_REPO,
@@ -498,20 +544,32 @@ def _kill_writer_and_check_recovery(spark, tmp_path, kill_point):
         ]
 
     assert os.listdir(_pins_dir(t)), "victim should have left a pin behind"
-    assert orphans(), "victim should have left its pending version behind"
-    assert sorted(read_table(spark, t).collect()) == pre_image
+    assert orphans(), "victim should have left a version behind"
+    assert sorted(tuple(r) for r in read_table(spark, t).collect()) == image
 
     # the next default writer proceeds despite the orphan state...
     n = update_table(spark, t, F.col("k") >= 150, {"v": F.lit(3)})
     assert n == 50
     out = read_table(spark, t)
-    assert out.filter(F.col("v") == 9).count() == 0  # victim never committed
+    # the victim committed only if killed after its swap
+    assert out.filter(F.col("v") == 9).count() == (50 if committed else 0)
     assert out.filter(F.col("v") == 3).count() == 50
     assert out.count() == 200
     # ...and collects the dead pid's pin and the victim's version dir
     live = os.path.basename(os.path.realpath(t))
     assert os.listdir(_pins_dir(t)) == []
     assert orphans() == []
+    if kill_point == "sink_before_swap":
+        from infinidb_spark.streaming.sink import write_epoch_idempotent
+
+        rows = spark.range(500, 510).select(
+            F.col("id").cast("bigint").alias("k"),
+            F.lit(0).cast("int").alias("grp"), F.lit(9).cast("int").alias("v"))
+        assert write_epoch_idempotent(rows, 0, t, sink_id="s") is True
+        assert write_epoch_idempotent(rows, 0, t, sink_id="s") is False
+        out = read_table(spark, t)
+        assert out.count() == 210
+        assert out.filter(F.col("v") == 9).count() == 10
 
 
 def test_conflict_diff_on_partitioned_table(spark, tmp_path):
@@ -658,3 +716,111 @@ def test_lock_file_is_per_holder_and_release_is_own_unlink(tmp_path):
     assert rec["lock_id"] == 424242
     assert "cleared" in clear_table_lock(str(tmp_path), 424242)
     assert view_table_locks(str(tmp_path), "t") == []
+
+
+def test_update_racing_a_sink_epoch_rebases(spark, tmp_path):
+    """A sink epoch is an INSERT: committed while an UPDATE of the same
+    table is in flight, its rows are phantoms to the UPDATE — never a
+    conflict, also when a swap winner carries them before the UPDATE
+    commits — and no row is lost."""
+    from infinidb_spark.streaming.sink import write_epoch_idempotent
+
+    t = _mk_table(spark, tmp_path, n=100)
+    epoch = spark.range(1000, 1005).select(
+        F.col("id").cast("bigint").alias("k"),
+        F.lit(0).cast("int").alias("grp"),
+        F.lit(0).cast("int").alias("v"),
+    )
+
+    def epoch_then_winner():
+        assert write_epoch_idempotent(epoch, 0, t, sink_id="s")
+        update_table(spark, t, F.col("k") < 10, {"v": F.lit(1)})
+
+    # disjoint from the table's rows: matches only the epoch's rows
+    n = update_table(
+        spark, t, F.col("k") >= 1000, {"v": F.lit(2)},
+        _before_commit=epoch_then_winner,
+    )
+    assert n == 5
+    out = read_table(spark, t)
+    assert out.count() == 105
+    assert out.filter(F.col("v") == 2).count() == 5
+    assert out.filter(F.col("v") == 1).count() == 10
+    assert os.path.exists(os.path.join(t, "_epochs", "s", "0"))
+    assert write_epoch_idempotent(epoch, 0, t, sink_id="s") is False
+    assert _no_debris(t)
+
+
+def test_swap_syncs_new_version_before_pointer_and_parent_after(
+    spark, tmp_path, monkeypatch
+):
+    """Durability of the one commit point: every file and directory of
+    the new version is fsynced before the pointer's os.replace, and the
+    parent directory after it."""
+    import infinidb_spark.operators.dml as dml
+
+    t = _mk_table(spark, tmp_path, n=10)
+    events: list[tuple[str, str]] = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        events.append(("fsync", os.readlink(f"/proc/self/fd/{fd}")))
+        return real_fsync(fd)
+
+    def replace(src, dst, *a, **k):
+        events.append(("replace", os.path.abspath(dst)))
+        return real_replace(src, dst, *a, **k)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    rows = spark.range(10, 12).select(
+        F.col("id").cast("bigint").alias("k"),
+        F.lit(0).cast("int").alias("grp"),
+        F.lit(0).cast("int").alias("v"),
+    )
+    dml.insert_into(rows, t)
+    monkeypatch.undo()
+
+    new = os.path.realpath(t)
+    commit = events.index(("replace", os.path.abspath(t)))
+    synced = {p for kind, p in events[:commit] if kind == "fsync"}
+    tree = {new}
+    for dirpath, dirs, files in os.walk(new):
+        tree |= {os.path.join(dirpath, x) for x in dirs + files}
+    assert len(tree) > 3 and tree <= synced, sorted(tree - synced)
+    assert ("fsync", os.path.realpath(tmp_path)) in events[commit + 1:]
+    assert read_table(spark, t).count() == 12
+
+
+@pytest.mark.parametrize("writer", ["insert", "update"])
+def test_failure_after_the_pointer_moved_keeps_the_new_version(
+    spark, tmp_path, monkeypatch, writer
+):
+    """An error raised inside _swap after its os.replace (here the
+    parent-directory fsync) must not make the writer's cleanup delete
+    the version the pointer now names: the table stays readable at the
+    statement's post-image."""
+    import infinidb_spark.operators.dml as dml
+
+    t = _mk_table(spark, tmp_path, n=10)
+    real_fsync = dml._fsync_path
+
+    def fsync(path):
+        if path == os.path.dirname(t):
+            raise OSError(5, "injected EIO")
+        return real_fsync(path)
+
+    monkeypatch.setattr(dml, "_fsync_path", fsync)
+    with pytest.raises(OSError, match="injected"):
+        if writer == "insert":
+            dml.insert_into(spark.range(10, 12).select(
+                F.col("id").cast("bigint").alias("k"),
+                F.lit(0).cast("int").alias("grp"),
+                F.lit(0).cast("int").alias("v"),
+            ), t)
+        else:
+            update_table(spark, t, F.col("k") < 5, {"v": F.lit(1)})
+    monkeypatch.undo()
+    out = read_table(spark, t)
+    assert out.count() == (12 if writer == "insert" else 10)
+    assert out.filter(F.col("v") == 1).count() == (0 if writer == "insert" else 5)

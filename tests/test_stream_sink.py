@@ -73,12 +73,25 @@ def test_operators_tolerate_null_and_empty_text(spark):
     T.analyze(docs).collect()
 
 
-def test_epoch_replay_is_idempotent(spark, tmp_path):
+def _versions(table):
+    """Version directories of ``table`` other than the live one."""
+    parent, base = os.path.dirname(table), os.path.basename(table)
+    live = os.path.basename(os.path.realpath(table))
+    return [
+        f for f in os.listdir(parent)
+        if f.startswith(base + ".__v") and f != live
+    ]
+
+
+def test_epoch_replay_is_idempotent(spark, tmp_path, crash_before_swap):
     """A replayed foreachBatch epoch (restart after crash) must not
-    double-write: second call with the same epoch id is skipped, and a
-    partial previous attempt is cleaned before re-linking."""
+    double-write: a replay after the swap is skipped by the live marker;
+    an attempt killed before its swap leaves the table at its pre-epoch
+    rows, and the replay lands the epoch exactly once and collects the
+    orphan version."""
     import os
 
+    from infinidb_spark.operators.dml import _pins_dir
     from infinidb_spark.streaming.sink import write_epoch_idempotent
 
     table = str(tmp_path / "ep_table")
@@ -87,12 +100,15 @@ def test_epoch_replay_is_idempotent(spark, tmp_path):
     assert write_epoch_idempotent(df, 0, table, sink_id="q1") is True
     assert write_epoch_idempotent(df, 0, table, sink_id="q1") is False  # replay skipped
     assert spark.read.parquet(table).count() == 2
-    # a partial attempt (files but no marker) is repaired on replay
-    marker = os.path.join(table, "_epochs", "q1", "1")
-    assert write_epoch_idempotent(df, 1, table, sink_id="q1") is True
-    os.remove(marker)  # simulate crash after link, before marker
-    assert write_epoch_idempotent(df, 1, table, sink_id="q1") is True  # re-links cleanly
+    crash_before_swap(
+        table, lambda: write_epoch_idempotent(df, 1, table, sink_id="q1")
+    )
+    assert len(_versions(table)) == 1  # the orphan, with its marker inside
+    assert spark.read.parquet(table).count() == 2  # pre-epoch rows only
+    assert write_epoch_idempotent(df, 1, table, sink_id="q1") is True  # lands
+    assert write_epoch_idempotent(df, 1, table, sink_id="q1") is False
     assert spark.read.parquet(table).count() == 4  # no duplicates
+    assert _versions(table) == [] and os.listdir(_pins_dir(table)) == []
 
 
 def test_epoch_markers_namespaced_per_sink(spark, tmp_path):
@@ -192,8 +208,6 @@ def test_quality_gate_sigkill_between_writes_converges(spark, tmp_path):
         read_gate_results,
         stream_quality_gate,
     )
-    from infinidb_spark.streaming.sink import read_committed
-
     work = str(tmp_path)
     in_dir = os.path.join(work, "in")
     out_dir = os.path.join(work, "out")
@@ -239,10 +253,8 @@ def test_quality_gate_sigkill_between_writes_converges(spark, tmp_path):
     assert proc.returncode == -9  # died by its own SIGKILL, mid-epoch
 
     # torn state: accepted committed, rejects missing entirely
-    acc = read_committed(spark, os.path.join(out_dir, ACCEPTED_DIR))
-    assert acc is not None and acc.count() == 3
-    rej = read_committed(spark, os.path.join(out_dir, REJECTS_DIR))
-    assert rej is None or rej.count() == 0
+    assert spark.read.parquet(os.path.join(out_dir, ACCEPTED_DIR)).count() == 3
+    assert not os.path.exists(os.path.join(out_dir, REJECTS_DIR))
 
     # restart on the SAME checkpoint — epoch replays, markers dedupe
     stream = spark.readStream.schema("doc_id bigint, text string").parquet(in_dir)
@@ -259,34 +271,33 @@ def test_quality_gate_sigkill_between_writes_converges(spark, tmp_path):
     assert res.groupBy("doc_id").count().filter(F.col("count") > 1).count() == 0
 
 
-def test_replay_sweep_never_touches_prefix_sibling_sink(spark, tmp_path):
-    """r10 review fix: sweeping sink 'a' epoch 1 used to glob
-    'ep_a_1_*', which matched sink 'a_1' epoch 2's COMMITTED files —
-    silent cross-sink data loss on replay.  The 'part-' anchor scopes
-    the sweep to this sink's own files."""
+def test_replay_sweep_never_touches_prefix_sibling_sink(
+    spark, tmp_path, crash_before_swap
+):
+    """Sink 'a' epoch 1 killed before its swap, then replayed: the
+    replay and the orphan sweep it runs must leave sink 'a_1' epoch 2's
+    committed rows alone (the old epoch-file sweep once globbed
+    'ep_a_1_*' and deleted them)."""
     import os
 
-    from infinidb_spark.streaming.sink import (
-        read_committed,
-        write_epoch_idempotent,
-    )
+    from infinidb_spark.streaming.sink import write_epoch_idempotent
 
     table = str(tmp_path / "t")
     os.makedirs(table)
     df = spark.createDataFrame([(1, "x")], "id long, s string")
     assert write_epoch_idempotent(df, 2, table, sink_id="a_1") is True
-    # replay sink 'a' epoch 1 twice (second run sweeps its own files)
+    crash_before_swap(
+        table, lambda: write_epoch_idempotent(df, 1, table, sink_id="a")
+    )
     assert write_epoch_idempotent(df, 1, table, sink_id="a") is True
-    marker = os.path.join(table, "_epochs", "a", "1")
-    os.remove(marker)  # crash-after-link: force the sweep on replay
-    assert write_epoch_idempotent(df, 1, table, sink_id="a") is True
-    got = read_committed(spark, table)
-    assert got is not None and got.count() == 2  # a_1's row SURVIVES
+    assert spark.read.parquet(table).count() == 2  # a_1's row SURVIVES
+    assert _versions(table) == []
 
 
-def test_epoch_sink_id_with_glob_metachars(spark, tmp_path):
-    """A sink id containing glob metacharacters must still sweep its
-    own partial files on replay (the pattern is escaped)."""
+def test_epoch_sink_id_with_glob_metachars(spark, tmp_path, crash_before_swap):
+    """A sink id containing glob metacharacters names its own marker
+    literally: an attempt killed before its swap is replayed once, and
+    the replay after that is skipped."""
     import os
 
     from infinidb_spark.streaming.sink import write_epoch_idempotent
@@ -294,11 +305,13 @@ def test_epoch_sink_id_with_glob_metachars(spark, tmp_path):
     table = str(tmp_path / "t2")
     os.makedirs(table)
     df = spark.createDataFrame([(1, "x")], "id long, s string")
+    crash_before_swap(
+        table, lambda: write_epoch_idempotent(df, 3, table, sink_id="q[1]")
+    )
     assert write_epoch_idempotent(df, 3, table, sink_id="q[1]") is True
-    marker = os.path.join(table, "_epochs", "q[1]", "3")
-    os.remove(marker)
-    assert write_epoch_idempotent(df, 3, table, sink_id="q[1]") is True
-    assert spark.read.parquet(table).count() == 1  # swept, not doubled
+    assert write_epoch_idempotent(df, 3, table, sink_id="q[1]") is False
+    assert os.path.exists(os.path.join(table, "_epochs", "q[1]", "3"))
+    assert spark.read.parquet(table).count() == 1  # landed once
 
 
 def test_underscore_partition_column_rejected(spark, tmp_path):
@@ -317,72 +330,90 @@ def test_underscore_partition_column_rejected(spark, tmp_path):
         write_epoch_idempotent(df, 0, table, partition_by=["_b"], sink_id="q")
 
 
-def test_read_committed_snapshot_with_underscore_sink_ids(spark, tmp_path):
-    """The marker snapshot keys on (sink, epoch) exactly as the writer
-    spells them — sink ids containing '_<digits>_' segments must not
-    confuse the greedy filename parse (r11 review: read_committed now
-    snapshots markers BEFORE the walk instead of statting per file)."""
+def test_underscore_sink_ids_keep_separate_markers(
+    spark, tmp_path, crash_before_swap
+):
+    """Sink ids 'a' and 'a_1' write markers under their own directories:
+    neither one's epochs skip or hide the other's, and an 'a_1' epoch
+    killed before its swap is invisible until its replay lands it."""
     import os
 
-    from infinidb_spark.streaming.sink import (
-        read_committed,
-        write_epoch_idempotent,
-    )
+    from infinidb_spark.streaming.sink import write_epoch_idempotent
 
     table = str(tmp_path / "snap_table")
     os.makedirs(table)
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
     assert write_epoch_idempotent(df, 2, table, sink_id="a_1") is True
     assert write_epoch_idempotent(df, 3, table, sink_id="a_1") is True
-    # simulate crash-after-link-before-marker for epoch 3
-    os.remove(os.path.join(table, "_epochs", "a_1", "3"))
-    got = read_committed(spark, table)
-    assert got is not None and got.count() == 2  # epoch 3 excluded
-
-
-def test_vacuum_sink_table_reclaims_only_old_uncommitted(spark, tmp_path):
-    """vacuum removes aged markerless epoch files and stale staging
-    dirs, and never touches committed epochs or fresh in-flight files
-    (r11 review: dead-sink garbage was unreclaimable forever)."""
-    import os
-    import time
-
-    from infinidb_spark.streaming.sink import (
-        vacuum_sink_table,
-        write_epoch_idempotent,
+    assert write_epoch_idempotent(df, 2, table, sink_id="a") is True
+    crash_before_swap(
+        table, lambda: write_epoch_idempotent(df, 4, table, sink_id="a_1")
     )
+    assert spark.read.parquet(table).count() == 6  # epoch 4 not visible
+    assert write_epoch_idempotent(df, 3, table, sink_id="a_1") is False
+    assert write_epoch_idempotent(df, 2, table, sink_id="a") is False
+    assert write_epoch_idempotent(df, 4, table, sink_id="a_1") is True
+    assert spark.read.parquet(table).count() == 8
+
+
+def test_crashed_epoch_is_collected_by_next_writer(
+    spark, tmp_path, crash_before_swap
+):
+    """A stream killed mid-epoch and restarted with a FRESH checkpoint
+    never replays the dead sink's epoch: its orphan version and dead pin
+    are collected by the next writer of the table, while a pending
+    version a live writer pins survives that sweep."""
+    import os
+
+    from infinidb_spark.operators.dml import _pin_version, _pins_dir
+    from infinidb_spark.streaming.sink import write_epoch_idempotent
 
     table = str(tmp_path / "vac_table")
     os.makedirs(table)
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
     assert write_epoch_idempotent(df, 0, table, sink_id="live") is True
-    # dead sink: linked file, no marker, old mtime
-    committed = [
-        f for f in os.listdir(table)
-        if f.startswith("ep_live_0_") and f.endswith(".parquet")
-    ]
-    assert committed
-    dead = os.path.join(table, "ep_dead_7_part-00000-x.parquet")
-    with open(dead, "wb") as fh:
-        fh.write(b"junk")
-    old = time.time() - 7200
-    os.utime(dead, (old, old))
-    # dead staging dir, old
-    stale_stage = os.path.join(table, ".epoch_dead_8_tmp")
-    os.makedirs(stale_stage)
-    with open(os.path.join(stale_stage, "part-0"), "wb") as fh:
-        fh.write(b"junk")
-    os.utime(os.path.join(stale_stage, "part-0"), (old, old))
-    os.utime(stale_stage, (old, old))
-    # fresh uncommitted file (an in-flight writer): must survive
-    fresh = os.path.join(table, "ep_inflight_1_part-00000-y.parquet")
-    with open(fresh, "wb") as fh:
-        fh.write(b"junk")
+    crash_before_swap(
+        table, lambda: write_epoch_idempotent(df, 7, table, sink_id="dead")
+    )
+    (dead,) = _versions(table)
+    in_flight = table + ".__vfeedfeedfeed__"
+    os.makedirs(in_flight)
+    pin = _pin_version(table, os.path.basename(in_flight))
+    assert write_epoch_idempotent(df, 1, table, sink_id="live") is True
+    assert _versions(table) == [os.path.basename(in_flight)]
+    assert os.listdir(_pins_dir(table)) == [os.path.basename(pin)]
+    assert spark.read.parquet(table).count() == 4
+    assert not os.path.exists(os.path.join(table, "_epochs", "dead"))
 
-    removed = vacuum_sink_table(table, min_age_sec=3600)
-    assert set(removed) == {dead, stale_stage}
-    assert os.path.exists(fresh)
-    assert all(os.path.exists(os.path.join(table, f)) for f in committed)
-    assert spark.read.parquet(
-        *(os.path.join(table, f) for f in committed)
-    ).count() == 2
+
+def test_every_rewrite_carries_the_sink_markers(spark, tmp_path):
+    """Row and DDL rewrites of a sink table build a new version from its
+    rows; each must carry the ``_epochs`` markers too, or the next
+    replay of a committed epoch lands its rows a second time."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from infinidb_spark.operators.dml import alter_table, delete_from, update_table
+    from infinidb_spark.operators.partitions import drop_partitions
+    from infinidb_spark.sources.layout import compact_table
+    from infinidb_spark.streaming.sink import write_epoch_idempotent
+
+    table = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "id long, s string")
+    assert write_epoch_idempotent(df, 0, table, sink_id="q")
+    assert write_epoch_idempotent(df, 1, table, sink_id="q")
+    rewrites = [
+        lambda: update_table(spark, table, F.col("id") == 1, {"s": F.lit("z")}),
+        lambda: delete_from(spark, table, F.col("id") == 2),
+        lambda: alter_table(spark, table, {"op": "add", "column": "n", "type": "int"}),
+        lambda: alter_table(spark, table, {"op": "modify", "column": "id", "type": "bigint"}),
+        lambda: compact_table(spark, table),
+        lambda: drop_partitions(table, [0]),
+    ]
+    for rewrite in rewrites:
+        n = spark.read.parquet(table).count()
+        rewrite()
+        assert os.path.exists(os.path.join(table, "_epochs", "q", "1"))
+        assert write_epoch_idempotent(df, 1, table, sink_id="q") is False
+        assert spark.read.parquet(table).count() <= n

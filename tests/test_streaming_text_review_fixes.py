@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from infinidb_spark.streaming.sink import (
-    read_committed,
+    hadoop_glob_escape,
     write_epoch_idempotent,
 )
 
@@ -23,20 +23,19 @@ def meta_dir(tmp_path):
     return str(d)
 
 
-def test_epoch_sink_on_metacharacter_path(spark, meta_dir):
-    """glob-based replay cleanup and hash-store listing must escape the
-    table path — '[1]' as a character class matched nothing, so replays
-    duplicated rows and the hash store read permanently empty."""
+def test_epoch_sink_on_metacharacter_path(spark, meta_dir, crash_before_swap):
+    """The epoch sink on a table path containing glob metacharacters:
+    a replay after a crash before the swap lands the epoch once, and a
+    replay after the swap is skipped — '[1]' read as a character class
+    once made replays duplicate rows and the hash store read empty."""
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    crash_before_swap(
+        meta_dir, lambda: write_epoch_idempotent(df, 0, meta_dir, sink_id="s1")
+    )
     assert write_epoch_idempotent(df, 0, meta_dir, sink_id="s1") is True
-    # simulate a crash-replay of the SAME epoch with different part
-    # uuids: drop the marker so the write re-runs
-    marker = os.path.join(meta_dir, "_epochs", "s1", "0")
-    os.remove(marker)
-    assert write_epoch_idempotent(df, 0, meta_dir, sink_id="s1") is True
-    got = read_committed(spark, meta_dir)
-    # the stale first attempt was swept — rows are NOT duplicated
-    assert got.count() == 2
+    assert write_epoch_idempotent(df, 0, meta_dir, sink_id="s1") is False
+    got = spark.read.parquet(hadoop_glob_escape(meta_dir))
+    assert got.count() == 2  # rows are NOT duplicated
 
 
 def test_hash_store_on_metacharacter_path(spark, meta_dir):

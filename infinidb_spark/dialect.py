@@ -3945,6 +3945,24 @@ def _where_cond(toks: list[Token], where_i: int | None, stmt: str) -> list[Token
     return cond
 
 
+#: clause keywords that must be followed by an argument
+_CLAUSES = ("WHERE", "HAVING", "LIMIT", "ON", "GROUP BY", "ORDER BY")
+
+
+def _reject_dangling_clause(toks: list[Token]) -> None:
+    """A statement that ends in a top-level clause keyword (``SELECT *
+    FROM t WHERE``) is MySQL's syntax error 1064, never a query: Spark
+    would read a bare trailing WHERE as an alias of ``t`` and return
+    every row."""
+    code = [t for t in toks if t[0] not in ("ws", "comment")]
+    if code.count(("sym", "(")) != code.count(("sym", ")")):
+        return  # the dangling word is inside a parenthesized span
+    tail = [t[1].upper() if t[0] == "word" else "" for t in code[-2:]]
+    for clause in (tail[-1], " ".join(tail)):
+        if clause in _CLAUSES:
+            raise DialectError(f"{clause} without an argument")
+
+
 def parse_statement(sql: str) -> dict:
     """Classify + parse one statement.  Returns a dict with ``kind`` ∈
     select|insert|update|delete; SELECTs carry the translated ``sql``,
@@ -4301,6 +4319,7 @@ def parse_statement(sql: str) -> dict:
         outfile = _parse_into_outfile(toks)
         if outfile is not None:
             return outfile
+    _reject_dangling_clause(toks)
     return {"kind": "select", "sql": render(toks)}
 
 

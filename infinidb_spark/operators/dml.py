@@ -7,40 +7,44 @@ UPDATE/DELETE internally run a SELECT to locate rows
 (`calpontselectexecutionplan.h:98-109` IDB_QUERYTYPE UPDATE/DELETE).
 
 Spark-native model: **copy-on-write** over Parquet directories with ONE
-commit protocol for every row write.  The live path ``<table>`` is a
-symlink to a version directory ``<table>.__v<uuid>__``; a statement
-builds a new version directory and then, under the table's commit lock,
-advances the symlink with a single atomic ``os.replace``.  A crash
-leaves the pointer on either the old or the new version, never missing
-and never a mix — the analog of the reference's version buffer, whose
-pre-image blocks stay readable until the pointer moves.
+commit protocol for every write, row DML and DDL alike.  The live path
+``<table>`` is a symlink to a version directory ``<table>.__v<uuid>__``;
+a statement builds a new version directory and then, under the table's
+commit lock, advances the symlink with a single atomic ``os.replace``.
+A crash leaves the pointer on either the old or the new version, never
+missing and never a mix — the analog of the reference's version buffer,
+whose pre-image blocks stay readable until the pointer moves.  Three
+entry points end in that one swap:
 
-* UPDATE / DELETE (single- and multi-table) read a pinned snapshot and
-  rewrite it outside the lock; at commit the snapshot token is checked.
-  Unchanged → swap.  Changed → a row-level diff against the winner
-  decides between rebase (disjoint rows: re-execute on the new version)
-  and first-committer-wins abort (``ConcurrentWriteConflict``).
-* INSERT / LOAD write the new rows once into a pinned pending version,
-  check NOT NULL there, then under the lock hard-link every file of the
-  live version in and swap.  An insert cannot conflict.  A streaming
-  sink epoch is such an insert that also stages its commit marker
-  ``_epochs/<sink>/<epoch>`` (and any side relation, such as the dedup
-  hash store) in the same version, so one swap publishes all of it and
-  a replay finds the marker in the live version.
-* ROLLBACK moves the pointer back to the retained pre-image
-  (``retain_version``).
+* ``_optimistic_rewrite`` — UPDATE / DELETE (single- and multi-table),
+  ALTER's rewrites and OPTIMIZE rewrite a pinned snapshot outside the
+  lock; at commit the snapshot token is checked.  Unchanged → swap.
+  Changed → a row-level diff against the winner decides between rebase
+  (disjoint rows: re-execute on the new version) and first-committer-
+  wins abort (``ConcurrentWriteConflict``).  DDL never rebases.
+* ``insert_into`` — INSERT / LOAD (and ALTER ADD COLUMN with a NULL
+  default: a zero-row file with the widened schema) write the new rows
+  once into a pinned pending version, check NOT NULL there, then under
+  the lock hard-link every file of the live version in and swap.  An
+  insert cannot conflict.  A streaming sink epoch is such an insert
+  that also stages its marker ``_epochs/<sink>/<epoch>`` (and any side
+  relation, such as the dedup hash store) in the same version, so one
+  swap publishes all of it and a replay finds the marker live.
+* ``commit_relinked`` — partition admin and ANALYZE's sidecar hard-link
+  the live version into a private one under the lock, edit it there
+  and swap.  An edit replaces (tmp + ``os.replace``) or unlinks a linked
+  name, never writes through it: the inode is the live version's too.
 
-Every swap fsyncs the new version's files and directories before the
-pointer moves and the parent directory after it, so a committed version
-survives power loss, not only a process crash.  No writer adds or
-removes a file inside a live version; the one in-place write is the
-``_partitions.json`` sidecar (operators/partitions.py), under the lock.
-
+``create_table`` (CTAS, TRUNCATE) writes a fresh version and swaps;
+ROLLBACK moves the pointer back to the retained pre-image
+(``retain_version``).  Every swap fsyncs the new version's files and
+directories before the pointer moves and the parent directory after it,
+so a committed version survives power loss, not only a process crash.
+No writer adds, removes or edits a file inside a live version.
 Affected-row counts come from an ``Observation`` on the written
 DataFrame, so no statement runs a separate count job.  Tables created
 before the symlink layout (plain directories) are migrated on the first
-swap.  DDL (create/alter/TRUNCATE/drop partitions, OPTIMIZE in
-sources/layout.py) holds the lock for its whole build.
+swap.
 """
 
 from __future__ import annotations
@@ -115,13 +119,9 @@ def _table_lock(table_dir: str, op: str):
 
     Mutual exclusion: create own file, then verify it is the ONLY lock
     file.  A proceeder verified sole ownership after creating, so two
-    proceeders are impossible; simultaneous acquirers may BOTH back
-    off.  Because bare _table_lock callers fail fast (no _table_lock_
-    wait loop), a both-backed-off collision is retried here a few
-    times with per-holder jitter — the old single-file O_EXCL design
-    always admitted one of two simultaneous acquirers, and fail-fast
-    callers must not regress to zero winners.  An ESTABLISHED holder
-    (file present before we create ours) still fails fast."""
+    proceeders are impossible; simultaneous acquirers may BOTH back off
+    and fail.  Every engine writer acquires through _table_lock_wait,
+    whose jittered poll retries such a collision."""
     payload = {
         # integer id — the reference's calcleartablelock takes the
         # lockID as an INT argument
@@ -148,27 +148,17 @@ def _table_lock(table_dir: str, op: str):
             "calcleartablelock to clear a stale lock"
         ) from None
 
-    for attempt in range(3):
-        others = _lock_files(table_dir)
-        if others:
-            _locked(others)  # established (or stale) holder: fail fast
-        fd = os.open(own, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        with os.fdopen(fd, "w") as fh:
-            json.dump(payload, fh)
-        others = [p for p in _lock_files(table_dir) if p != own]
-        if not others:
-            break  # sole owner — acquired
+    others = _lock_files(table_dir)
+    if others:
+        _locked(others)  # established (or stale) holder
+    fd = os.open(own, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+    with os.fdopen(fd, "w") as fh:
+        json.dump(payload, fh)
+    others = [p for p in _lock_files(table_dir) if p != own]
+    if others:
         # collided with a concurrent acquirer: back off symmetrically
-        try:
-            os.remove(own)
-        except FileNotFoundError:
-            pass
-        if attempt == 2:
-            _locked(others)
-        # fresh random jitter EACH attempt: a fixed per-holder delay
-        # would let two acquirers with colliding residues re-collide
-        # deterministically on every retry (zero winners)
-        time.sleep(0.002 + random.random() * 0.02)
+        os.remove(own)
+        _locked(others)
     try:
         yield
     finally:
@@ -509,8 +499,9 @@ def insert_into(df: DataFrame, table_dir: str, codec: str | None = None,
                 stmt: str = "INSERT", partition_by: list[str] | None = None,
                 marker: str | None = None, side: dict | None = None,
                 _before_commit=None) -> int | None:
-    """INSERT / LOAD / streaming-sink epoch: returns the number of rows
-    inserted (≅ cpimport incremental load / ha_calpont_impl_write_row_).
+    """INSERT / LOAD / streaming-sink epoch / metadata-only ADD COLUMN:
+    returns the number of rows inserted (≅ cpimport incremental load /
+    ha_calpont_impl_write_row_).
 
     The rows are written ONCE into a pending version directory, pinned
     before its first byte lands so a crashed insert is collected by the
@@ -547,8 +538,7 @@ def insert_into(df: DataFrame, table_dir: str, codec: str | None = None,
             c for c in _hive_partition_cols(table_dir) if c in df.columns
         ]
         obs = Observation()
-        counted = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        managed_writer(counted, "overwrite", codec, cols or None).parquet(new_dir)
+        managed_writer(_observe_rows(df, obs), "overwrite", codec, cols or None).parquet(new_dir)
         n = obs.get["rows"]
         if notnull and n:
             pred = " OR ".join(f"`{c}` IS NULL" for c in notnull)
@@ -587,22 +577,28 @@ def insert_into(df: DataFrame, table_dir: str, codec: str | None = None,
         _unpin(pin)
 
 
-def commit_relinked(table_dir: str, op: str, edit) -> None:
+def commit_relinked(table_dir: str, op: str, edit) -> bool:
     """Commit a file-level change without rewriting rows: under the
     commit lock, hard-link every live file into a new version, let
-    ``edit(new_dir)`` add or remove files there (the version is still
-    private), and swap.  A crash before the swap leaves an unpinned
-    orphan that the next writer's sweep collects."""
+    ``edit(new_dir)`` add, replace or unlink files there (the version is
+    still private; a linked name is replaced, never written through),
+    and swap.  An edit that returns False has nothing to commit: the
+    version is discarded and False returned.  A crash before the swap
+    leaves an unpinned orphan that the next writer's sweep collects."""
     with _table_lock_wait(table_dir, op):
         new_dir = _new_version_dir(table_dir)
         try:
             os.makedirs(new_dir)
             _link_live_files(table_dir, new_dir)
-            edit(new_dir)
+            changed = edit(new_dir) is not False
         except BaseException:
             shutil.rmtree(new_dir, ignore_errors=True)
             raise
+        if not changed:
+            shutil.rmtree(new_dir)
+            return False
         _swap(table_dir, new_dir)
+        return True
 
 
 def assign_auto_increment(df: DataFrame, col: str, start: int) -> DataFrame:
@@ -669,20 +665,22 @@ def assign_auto_increment(df: DataFrame, col: str, start: int) -> DataFrame:
     return out.drop("_ai_pid", "_ai_mid", "_ai_rank", "_ai_off")
 
 
-def _rewrite_writer(df: DataFrame, codec: str | None,
-                    table_dir: str | None = None):
+def _rewrite_writer(df: DataFrame, codec: str | None, snap_dir: str):
     """Overwrite-mode writer honoring the table's pinned compression
     codec (COMMENT='compression=N'; None = Spark default snappy) — every
     copy-on-write rewrite must keep the storage setting, not just the
-    INSERT paths.  When ``table_dir`` is given, the rewrite also keeps
-    a hive-partitioned layout (a flat rewrite of a partitioned table
+    INSERT paths — and the hive-partitioned layout of the pinned
+    snapshot ``snap_dir`` (a flat rewrite of a partitioned table
     silently dropped the partitioning)."""
-    cols = None
-    if table_dir is not None:
-        cols = [
-            c for c in _hive_partition_cols(table_dir) if c in df.columns
-        ] or None
-    return managed_writer(df, "overwrite", codec, cols)
+    cols = [c for c in _hive_partition_cols(snap_dir) if c in df.columns]
+    return managed_writer(df, "overwrite", codec, cols or None)
+
+
+def _observe_rows(df: DataFrame, obs) -> DataFrame:
+    """``df`` with its row count observed on ``obs`` as ``rows``."""
+    from pyspark.sql import functions as F
+
+    return df.observe(obs, F.count(F.lit(1)).alias("rows"))
 
 
 def _apply_assignments(
@@ -973,64 +971,58 @@ def alter_table(
     ``dbcon/ddlpackage/ddl.y:477-560``: AtaAddColumn, AtaDropColumn,
     AtaModifyColumnType, AtaRenameColumn).
 
-    Scale design: ``ADD COLUMN`` with a NULL default is METADATA-ONLY —
-    every existing file is hard-linked into the new version and one
-    zero-row file carries the widened schema (old rows read as NULL via
-    schema merge); no data is rewritten at any table size.  Type-
-    changing actions (MODIFY/CHANGE/non-NULL DEFAULT) and DROP must
-    materialize new values, so they are copy-on-write rewrites — same
-    contract as UPDATE.
+    Scale design: ``ADD COLUMN`` with a NULL default on a flat table is
+    METADATA-ONLY — an ``insert_into`` of one zero-row file carrying the
+    widened schema (old rows read as NULL via schema merge; to pinned
+    writers the version is a phantom append); no data is rewritten at
+    any table size.  Type-changing actions (MODIFY/CHANGE/non-NULL
+    DEFAULT), DROP and RENAME COLUMN must materialize new values, so they
+    are ``_optimistic_rewrite`` builds of a pinned snapshot, outside the
+    commit lock; a change committed meanwhile aborts the ALTER with
+    ``ConcurrentWriteConflict``.  A table with out-of-service partitions
+    is refused (checked on the pinned snapshot): a rewrite from the
+    enabled files only would fork the schema away from the disabled
+    data, and the reference likewise refuses DDL over them.
     """
     from pyspark.sql import functions as F
 
     from infinidb_spark.operators.partitions import disabled_partitions
 
     op = action["op"]
-    # Everything version-dependent — realpath, the disabled check, the
-    # layout check, and the READ PLAN (Spark pins the file listing when
-    # the DataFrame is created) — runs UNDER the lock: an unlocked plan
-    # racing a concurrent committed UPDATE would hard-link / re-read
-    # the outgoing version and silently revert it (or crash on GC'd
-    # paths).  Row writers pin their snapshot for the same reason.
-    with _table_lock(table_dir, "ALTER"):
-        real = os.path.realpath(table_dir.rstrip("/"))
-        if disabled_partitions(table_dir):
-            # a rewrite from the enabled files only would fork the schema
-            # away from the out-of-service data; the reference likewise
-            # refuses DDL over disabled partitions
+
+    def refuse_disabled(version_dir: str) -> None:
+        if disabled_partitions(version_dir):
             raise RuntimeError(
                 "ALTER TABLE with out-of-service partitions — "
                 "calenablepartitions or caldroppartitions first"
             )
-        flat = not any(
-            os.path.isdir(os.path.join(real, f))
-            for f in os.listdir(real)
-            if not f.startswith(("_", "."))
-        )
-        df = read_table(spark, table_dir)
-        if op == "add" and action.get("default") is None and flat:
-            if action["column"] in df.columns:
-                raise ValueError(f"column {action['column']!r} already exists")
-            widened = df.limit(0).withColumn(
-                action["column"], F.lit(None).cast(action["type"])
-            )
-            new_dir = _new_version_dir(table_dir)
-            _link_live_files(table_dir, new_dir)
-            managed_writer(widened, "append", codec).parquet(new_dir)
-            _swap(table_dir, new_dir)
-            return
 
+    def check_new(df: DataFrame, col: str) -> None:
+        if col in df.columns:
+            raise ValueError(f"column {col!r} already exists")
+
+    def check_old(df: DataFrame, col: str) -> None:
+        if col not in df.columns:
+            raise ValueError(f"no such column {col!r}")
+
+    if op == "add" and action.get("default") is None and not _hive_partition_cols(table_dir):
+        refuse_disabled(table_dir)
+        df = read_table(spark, table_dir)
+        check_new(df, action["column"])
+        widened = df.limit(0).withColumn(action["column"], F.lit(None).cast(action["type"]))
+        insert_into(widened, table_dir, codec, stmt="ALTER")
+        return
+
+    def build(df: DataFrame, obs) -> DataFrame:
         if op == "add":
-            if action["column"] in df.columns:
-                raise ValueError(f"column {action['column']!r} already exists")
+            check_new(df, action["column"])
             dflt = action.get("default")
             out = df.withColumn(
                 action["column"],
                 (F.expr(dflt) if dflt is not None else F.lit(None)).cast(action["type"]),
             )
         elif op == "drop":
-            if action["column"] not in df.columns:
-                raise ValueError(f"no such column {action['column']!r}")
+            check_old(df, action["column"])
             out = df.drop(action["column"])
         elif op == "modify":
             out = df.withColumn(action["column"], F.col(action["column"]).cast(action["type"]))
@@ -1040,17 +1032,20 @@ def alter_table(
             ).withColumnRenamed(action["old"], action["new"])
         elif op == "rename_column":
             # RENAME COLUMN old TO new (ddl.y AtaRenameColumn): type kept
-            if action["old"] not in df.columns:
-                raise ValueError(f"no such column {action['old']!r}")
-            if action["new"] in df.columns:
-                raise ValueError(f"column {action['new']!r} already exists")
+            check_old(df, action["old"])
+            check_new(df, action["new"])
             out = df.withColumnRenamed(action["old"], action["new"])
         else:
             raise ValueError(f"unknown ALTER action {op!r}")
-        new_dir = _new_version_dir(table_dir)
-        _rewrite_writer(out, codec, table_dir).parquet(new_dir)
-        _carry_side_state(real, new_dir)
-        _swap(table_dir, new_dir)
+        return _observe_rows(out, obs)
+
+    def writer(out: DataFrame, codec: str | None, snap_dir: str):
+        refuse_disabled(snap_dir)
+        return _rewrite_writer(out, codec, snap_dir)
+
+    _optimistic_rewrite(
+        spark, table_dir, "ALTER", build, None, codec, max_retries=0, writer=writer
+    )
 
 
 def rename_table(table_dir: str, new_dir: str) -> None:
@@ -1058,7 +1053,7 @@ def rename_table(table_dir: str, new_dir: str) -> None:
     plain directory).  The link target is version-dir BASENAME-relative
     (same parent), so renaming only the link preserves resolution.
 
-    Runs under the table lock (every other mutator does; an unlocked
+    Waits for the commit lock like every other mutator (an unlocked
     rename racing a committer's _swap could re-create the old path and
     leave the table live under both names), and CARRIES THE SIDECARS:
     retention (``.__retain__``) and pins (``.__pins__``) are
@@ -1068,7 +1063,7 @@ def rename_table(table_dir: str, new_dir: str) -> None:
     src, dst = table_dir.rstrip("/"), new_dir.rstrip("/")
     if os.path.lexists(dst):
         raise ValueError(f"target {new_dir!r} already exists")
-    with _table_lock(src, "RENAME"):
+    with _table_lock_wait(src, "RENAME"):
         os.rename(src, dst)
         for suffix in (".__retain__", ".__pins__"):
             if os.path.lexists(src + suffix):
@@ -1187,11 +1182,10 @@ def _snapshot(table_dir: str) -> tuple[str, str, dict[str, tuple[int, int]]]:
     """(resolved version dir, content token, per-file identity map).
 
     The token hashes the file SET (relative names + sizes + mtimes),
-    not just the version basename: the ``_partitions.json`` sidecar is
-    rewritten in place (ENABLE/DISABLE PARTITIONS), and a file added,
-    removed or edited in a version by an external tool must invalidate
-    a snapshot too.  mtime_ns in the identity guards the pathological
-    same-name-same-size rewrite.
+    not just the version basename.  No engine writer edits a live
+    version, but a file added, removed or edited in one by an external
+    tool must still invalidate a snapshot.  mtime_ns in the identity
+    guards the pathological same-name-same-size rewrite.
 
     The conflict path diffs two identity maps ``{relpath: (size,
     mtime_ns)}`` so it reads only CHANGED files, never the whole
@@ -1301,8 +1295,10 @@ def _overlap_on_changed_files(
 def _table_lock_wait(table_dir: str, op: str, timeout: float = 60.0,
                      poll: float = 0.05):
     """`_table_lock` that WAITS (bounded) instead of failing fast —
-    row writers hold it only for commit-time validate+swap, so
-    contention windows are milliseconds, not rewrite durations."""
+    writers hold it only for commit-time validate+swap, so contention
+    windows are milliseconds, not rewrite durations.  The poll is
+    jittered afresh each round: two acquirers that collided and both
+    backed off must not retry in lockstep forever."""
     deadline = time.monotonic() + timeout
     while True:
         cm = _table_lock(table_dir, op)
@@ -1311,7 +1307,7 @@ def _table_lock_wait(table_dir: str, op: str, timeout: float = 60.0,
         except RuntimeError:
             if time.monotonic() >= deadline:
                 raise
-            time.sleep(poll)
+            time.sleep(poll * (0.5 + random.random()))
             continue
         try:
             yield
@@ -1331,9 +1327,11 @@ def _sweep_orphan_versions(table_dir: str) -> None:
     transaction, and not pinned by a live-pid writer
     (`_pinned_versions` drops dead-pid pins first).
 
-    Must run under the table lock: DDL builds its new version UNDER
-    that lock, and row writers pin their in-flight version dir BEFORE
-    its first byte is written, so anything unpinned here is garbage.
+    Must run under the table lock: the two unpinned builders
+    (create_table, commit_relinked) make their version only while
+    holding it, and every other writer pins its in-flight version dir
+    BEFORE its first byte is written, so anything unpinned here is
+    garbage.
     Ordering matters: version dirs are LISTED first and the keep-set
     read AFTER — a concurrent writer pins (lock-free) before creating
     its dir, so any dir the listing sees has its pin visible to the
@@ -1379,16 +1377,21 @@ def _optimistic_rewrite(
     max_retries: int = 3,
     lock_timeout: float = 60.0,
     _before_commit=None,
+    writer=_rewrite_writer,
 ) -> int:
     """THE copy-on-write loop for UPDATE/DELETE, single- and
-    multi-table; returns the affected-row count.
+    multi-table, ALTER's rewrites and OPTIMIZE; returns the affected-row
+    count.
 
     ``build(df, obs) -> rewritten df`` observes the affected rows on
     ``obs`` (a fresh ``Observation`` per attempt), so the count comes
     out of the write job itself.  ``select(df) -> rows this statement
-    writes`` drives the conflict probe.  ``_before_commit`` is a test
-    hook invoked after the rewrite is built, before the commit lock —
-    the deterministic way to interleave a competing committed write.
+    writes`` drives the conflict probe; DDL passes ``max_retries=0``
+    (any concurrent change aborts it) and no selector.
+    ``writer(df, codec, snap_dir)`` shapes the write (OPTIMIZE sizes its
+    files).  ``_before_commit`` is a test hook invoked after the rewrite
+    is built, before the commit lock — the deterministic way to
+    interleave a competing committed write.
 
     Conflict detection sees every create/rename/unlink/in-place edit
     of a file (_snapshot stats every file)."""
@@ -1413,9 +1416,9 @@ def _optimistic_rewrite(
             # version dir as crash debris
             pins.append(_pin_version(table_dir, os.path.basename(new_dir)))
             out = build(read_table(spark, snap_dir), obs)
-            _rewrite_writer(out, codec, table_dir).parquet(new_dir)
+            writer(out, codec, snap_dir).parquet(new_dir)
             n = obs.get["rows"]
-            carry_disabled(table_dir, new_dir)
+            carry_disabled(snap_dir, new_dir)
             _carry_side_state(snap_dir, new_dir)
             if _before_commit is not None:
                 hook, _before_commit = _before_commit, None

@@ -15,24 +15,25 @@ Reference: InfiniDB exposes partition administration as MySQL UDFs
 Here a *logical partition* is one Parquet part-file of a managed table
 (operators/dml.py layout) — the extent analog, exactly the granularity
 the manifest (sources/manifest.py) tracks min/max for.  State lives in a
-``_partitions.json`` sidecar inside the live version directory (the
+``_partitions.json`` sidecar inside the table's version directory (the
 leading underscore hides it from Spark's file listing and the manifest
 harvest, like `_SUCCESS`):
 
     {"disabled": ["part-00003-....parquet", ...]}
 
-Disable/enable are METADATA-ONLY — one atomic sidecar replace, no data
-movement at any table size (the reference flips an extent-map bit for
-the same reason).  Drop hard-links every surviving file into a fresh
-version directory and advances the table pointer — one atomic swap,
-zero bytes copied.  ``enabled_files`` is the single choke point the DML
-layer reads through, so a disabled partition is invisible to SELECT,
-UPDATE, DELETE and ALTER alike, and rewrites carry disabled files
-forward untouched (re-enable restores their rows bit-for-bit).
+Disable, enable and drop are relinked commits (operators/dml.py
+``commit_relinked``): every live file is hard-linked into a private
+version, the sidecar is replaced or the dropped files unlinked there,
+and the table pointer swaps once — no data movement at any table size
+(the reference flips an extent-map bit for the same reason), and no
+write into the live version.  ``enabled_files`` is the single choke
+point the DML layer reads through, so a disabled partition is invisible
+to SELECT, UPDATE, DELETE and ALTER alike, and rewrites carry disabled
+files forward untouched (re-enable restores their rows bit-for-bit).
 
 Scale: all operations are driver-side metadata over the file listing —
-O(#files) string work, no Spark job, no shuffle; the expensive paths
-(query planning over survivors) reuse the manifest's plan-time
+O(#files) links and fsyncs, no Spark job, no shuffle; the expensive
+paths (query planning over survivors) reuse the manifest's plan-time
 elimination.
 """
 
@@ -43,6 +44,8 @@ import os
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+
+from infinidb_spark.operators.dml import _write_json_atomic, commit_relinked
 
 SIDECAR = "_partitions.json"
 
@@ -69,12 +72,10 @@ def _read_sidecar(real_dir: str) -> dict[str, Any]:
 
 
 def _write_sidecar(real_dir: str, state: dict[str, Any]) -> None:
-    """Atomic replace — a reader never sees a torn sidecar."""
-    p = os.path.join(real_dir, SIDECAR)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(state, fh)
-    os.replace(tmp, p)
+    """tmp + ``os.replace`` in a private version: the name may be a hard
+    link to the live version's sidecar, which must never be written
+    through."""
+    _write_json_atomic(os.path.join(real_dir, SIDECAR), state)
 
 
 def disabled_partitions(table_dir: str) -> set[str]:
@@ -193,77 +194,69 @@ def disable_partitions(table_dir: str, parts: str | list) -> str:
     """Mark partitions out of service (metadata-only).  Returns the
     reference's message text (`ha_calpont_partition.cpp:793-797`).
 
-    Runs under the table lock like every DML rewrite: the sidecar
-    update is a read-modify-write (two concurrent disables would lose
-    one), and racing a DML's enabled_files()/carry_disabled() window
-    could double rows after re-enable."""
-    from infinidb_spark.operators.dml import _table_lock
-
-    with _table_lock(table_dir, "DISABLE PARTITIONS"):
-        real = _real(table_dir)
-        targets = _resolve(real, parts)
-        state = _read_sidecar(real)
+    A relinked commit (operators/dml.py ``commit_relinked``): the
+    sidecar's read-modify-write runs on the private version under the
+    commit lock, so two concurrent disables cannot lose one, and a
+    DML rewrite pinned on the old version aborts or rebases at its
+    token check instead of carrying stale disabled state."""
+    def edit(version_dir: str) -> bool:
+        state = _read_sidecar(version_dir)
         already = set(state["disabled"])
-        fresh = [f for f in targets if f not in already]
-        if not fresh:
-            return "No partitions are disabled"
-        state["disabled"] = sorted(already | set(fresh))
-        _write_sidecar(real, state)
-    return "Partitions are disabled successfully"
+        fresh = set(_resolve(version_dir, parts)) - already
+        if fresh:
+            _write_sidecar(version_dir, {**state, "disabled": sorted(already | fresh)})
+        return bool(fresh)
+
+    if commit_relinked(table_dir, "DISABLE PARTITIONS", edit):
+        return "Partitions are disabled successfully"
+    return "No partitions are disabled"
 
 
 def enable_partitions(table_dir: str, parts: str | list) -> str:
-    from infinidb_spark.operators.dml import _table_lock
+    def edit(version_dir: str) -> bool:
+        state = _read_sidecar(version_dir)
+        off = set(state["disabled"])
+        back = set(_resolve(version_dir, parts)) & off
+        if back:
+            _write_sidecar(version_dir, {**state, "disabled": sorted(off - back)})
+        return bool(back)
 
-    with _table_lock(table_dir, "ENABLE PARTITIONS"):
-        real = _real(table_dir)
-        targets = set(_resolve(real, parts))
-        state = _read_sidecar(real)
-        state["disabled"] = sorted(set(state["disabled"]) - targets)
-        _write_sidecar(real, state)
+    commit_relinked(table_dir, "ENABLE PARTITIONS", edit)
     return "Partitions are enabled successfully."
 
 
 def drop_partitions(table_dir: str, parts: str | list) -> str:
-    """Physically drop partitions: hard-link all survivors into a new
-    version directory and atomically advance the table pointer — the
-    copy-on-write twin of the reference's caldroppartitions DDL
-    (`ha_calpont_partition.cpp:831`).  Zero bytes copied.  Takes the
-    table lock: an unlocked drop racing a concurrent DML rewrite would
-    be resurrected by the DML's later swap (lost drop)."""
-    from infinidb_spark.operators.dml import (
-        _carry_side_state, _new_version_dir, _swap, _table_lock,
-    )
+    """Physically drop partitions: a relinked commit whose private
+    version unlinks the dropped files — the copy-on-write twin of the
+    reference's caldroppartitions DDL (`ha_calpont_partition.cpp:831`).
+    Zero bytes copied; a concurrent DML rewrite pinned on the old
+    version sees the drop at its token check, so it cannot resurrect
+    the dropped rows."""
+    import pyarrow.parquet as pq
 
-    with _table_lock(table_dir, "DROP PARTITIONS"):
-        real = _real(table_dir)
-        targets = set(_resolve(real, parts))
-        if not targets:
-            return "No partitions are dropped"
-        keep = [f for f in _part_files(real) if f not in targets]
-        state = _read_sidecar(real)
-        new_dir = _new_version_dir(table_dir)
-        os.makedirs(new_dir)
-        for f in keep:
-            os.link(os.path.join(real, f), os.path.join(new_dir, f))
-        if not keep:
+    def edit(version_dir: str) -> bool:
+        targets = set(_resolve(version_dir, parts))
+        files = _part_files(version_dir)
+        empty = None
+        if targets and targets == set(files):
             # dropping EVERY partition must leave a readable empty
             # table, not a parquet-less directory that fails schema
             # inference on every later read (the DELETE-all path writes
             # an empty schema-bearing file for the same reason)
-            import pyarrow.parquet as _pq
+            empty = pq.read_schema(os.path.join(version_dir, files[0])).empty_table()
+        for f in targets:
+            os.remove(os.path.join(version_dir, f))
+        if empty is not None:
+            pq.write_table(empty, os.path.join(version_dir, "part-empty.parquet"))
+        state = _read_sidecar(version_dir)
+        off = set(state["disabled"])
+        if off & targets:
+            _write_sidecar(version_dir, {**state, "disabled": sorted(off - targets)})
+        return bool(targets)
 
-            first = _part_files(real)[0]
-            schema = _pq.read_schema(os.path.join(real, first))
-            _pq.write_table(
-                schema.empty_table(), os.path.join(new_dir, "part-empty.parquet")
-            )
-        survivors = {"disabled": sorted(set(state["disabled"]) & set(keep))}
-        if survivors["disabled"]:
-            _write_sidecar(new_dir, survivors)
-        _carry_side_state(real, new_dir)
-        _swap(table_dir, new_dir)
-    return "Partitions are dropped successfully"
+    if commit_relinked(table_dir, "DROP PARTITIONS", edit):
+        return "Partitions are dropped successfully"
+    return "No partitions are dropped"
 
 
 def carry_disabled(table_dir: str, new_dir: str) -> None:

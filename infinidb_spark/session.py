@@ -688,9 +688,11 @@ class InfiniSession:
           truncated file fails the read), report the file count;
         * ANALYZE  — rebuild the min/max manifest fresh (the extent-map
           stats the planner prunes with; ≅ the reference recalculating
-          casual-partition ranges);
-        * OPTIMIZE — compact small part files (sources/layout.py), the
-          defragmentation analog;
+          casual-partition ranges) and commit it as a sidecar in a
+          relinked version (operators/dml.py commit_relinked);
+        * OPTIMIZE — compact small part files with the table's codec
+          (sources/layout.py), the defragmentation analog; a rewrite
+          that a concurrent change aborts;
         * REPAIR   — nothing to repair in immutable Parquet + manifest;
           reports OK (mysqld reports 'note' for engines without repair).
         """
@@ -730,8 +732,10 @@ class InfiniSession:
                         rows.append((full, op, "status",
                                      f"OK ({len(m)} file(s))"))
                 elif op == "analyze":
+                    from infinidb_spark.operators.dml import commit_relinked
                     from infinidb_spark.sources.manifest import (
-                        _has_nested_data, build_manifest, write_manifest,
+                        SIDECAR_NAME, _has_nested_data, build_manifest,
+                        write_manifest,
                     )
 
                     if _has_nested_data(path):
@@ -743,10 +747,12 @@ class InfiniSession:
                                      "Partitioned table; native partition"
                                      " pruning applies, manifest skipped"))
                     else:
+                        # footers read outside the commit lock; the
+                        # sidecar lands in a relinked private version
                         m = build_manifest(path)
-                        write_manifest(
-                            m, os.path.join(path, "_infinidb_manifest.json")
-                        )
+                        commit_relinked(path, "ANALYZE", lambda d: write_manifest(
+                            m, os.path.join(d, SIDECAR_NAME)
+                        ))
                         rows.append((full, op, "status", "OK"))
                 elif op == "optimize":
                     from infinidb_spark.sources.layout import (
@@ -754,7 +760,8 @@ class InfiniSession:
                     )
 
                     before, _ = table_file_stats(path)
-                    compact_table(self.spark, path)
+                    codec = self._table_meta.get(t, {}).get("codec")
+                    compact_table(self.spark, path, codec=codec)
                     self._refresh(t)
                     after, _ = table_file_stats(path)
                     rows.append((full, op, "status",

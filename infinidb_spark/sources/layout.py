@@ -13,9 +13,10 @@ extent map `versioning/BRM/extentmap.h:103`).
   shape, built from two Spark primitives (one range shuffle).
 * ``compact_table`` — rewrite a managed table's accumulated small
   files (INSERT appends, operators/dml.py) into size-targeted files,
-  swapped in atomically.  File count comes from footer metadata, not a
-  data scan; at 100 TB compaction is the difference between a scan
-  scheduling millions of tiny splits and thousands of full ones.
+  committed through the DML rewrite loop.  File count comes from
+  footer metadata, not a data scan; at 100 TB compaction is the
+  difference between a scan scheduling millions of tiny splits and
+  thousands of full ones.
 """
 
 from __future__ import annotations
@@ -24,8 +25,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from infinidb_spark.operators.dml import _carry_side_state, _new_version_dir, _swap
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
@@ -166,52 +165,40 @@ def table_file_stats(table_dir: str) -> tuple[int, int]:
     return n, total
 
 
-def _partition_columns(table_dir: str) -> list[str]:
-    """Hive-partition column names from the directory layout, outermost
-    first ([] for a flat table).  Thin alias for the ONE walker in
-    operators/dml.py — the local copy dropped dml's mixed-name guard,
-    so a stray 'x=y' directory beside plain part files made
-    compact_table partitionBy() a column absent from the DataFrame and
-    abort inside the table lock."""
-    from infinidb_spark.operators.dml import _hive_partition_cols
-
-    return _hive_partition_cols(table_dir)
-
-
 def compact_table(
     spark: SparkSession,
     table_dir: str,
     target_file_bytes: int = DEFAULT_TARGET_BYTES,
     cluster_by: list[str] | None = None,
+    codec: str | None = None,
 ) -> int:
     """Rewrite a managed table into ``ceil(total/target)`` files
-    (optionally re-clustering), atomically swapped in via the DML
-    version-directory protocol.  Returns the new file count.
+    (optionally re-clustering) with the table's compression ``codec``.
+    Returns the new file count.
 
-    Safety contract (same as every other rewrite in operators/dml.py):
-    the table lock serializes against concurrent DML, the read is
-    schema-merged (``read_table``) so the wide schema of a
-    metadata-only ADD COLUMN survives, and a hive-partitioned layout is
+    Commits through the DML rewrite loop (operators/dml.py
+    ``_optimistic_rewrite``): the compaction reads a pinned snapshot
+    and builds outside the commit lock, and any change committed
+    meanwhile aborts it with ``ConcurrentWriteConflict`` — compaction
+    never rebases.  The read is schema-merged (``read_table``) so the
+    wide schema of a metadata-only ADD COLUMN survives, disabled
+    partitions are carried untouched, and a hive-partitioned layout is
     rewritten WITH its partition columns, never flattened."""
-    from infinidb_spark.operators.dml import _table_lock, read_table
-    from infinidb_spark.operators.partitions import carry_disabled, disabled_partitions
+    from infinidb_spark.operators.dml import (
+        _hive_partition_cols, _observe_rows, _optimistic_rewrite, managed_writer,
+    )
+    from infinidb_spark.operators.partitions import disabled_partitions
 
-    with _table_lock(table_dir, "OPTIMIZE"):
-        n_files, total = table_file_stats(table_dir)
+    def shaped(df: DataFrame, codec: str | None, snap_dir: str):
+        _, total = table_file_stats(snap_dir)
         # size from the ENABLED bytes only: read_table excludes
         # disabled partitions from the rewrite input, so counting
         # their bytes over-targeted the file count (under-compacting
         # a half-disabled table by up to 2×)
-        real = os.path.realpath(table_dir)
-        for f in disabled_partitions(table_dir):
-            p = os.path.join(real, f)
-            if os.path.isfile(p):
-                total -= os.path.getsize(p)
+        for f in disabled_partitions(snap_dir):
+            total -= os.path.getsize(os.path.join(snap_dir, f))
         total = max(total, 0)
-        n_target = max(1, -(-total // target_file_bytes))
-        df = read_table(spark, table_dir)
-        part_cols = _partition_columns(table_dir)
-        new_dir = _new_version_dir(table_dir)
+        part_cols = [c for c in _hive_partition_cols(snap_dir) if c in df.columns]
         if part_cols:
             # one task per partition VALUE (write_table's shape): a
             # round-robin repartition(n_target) put every value in
@@ -220,33 +207,21 @@ def compact_table(
             # maxRecordsPerFile splits oversized values into
             # target-sized chunks; with the in-task sort those chunks
             # are cluster-ordered ranges.
-            rows = df.count()
-            rpf = max(1, int(rows * target_file_bytes / max(total, 1)))
-            sort_cols = part_cols + [
-                c for c in (cluster_by or []) if c not in part_cols
-            ]
-            writer = (
-                df.repartition(*part_cols)
-                .sortWithinPartitions(*sort_cols)
-                .write.mode("overwrite")
-                .option("maxRecordsPerFile", str(rpf))
-                .partitionBy(*part_cols)
+            rpf = max(1, int(df.count() * target_file_bytes / max(total, 1)))
+            sort_cols = part_cols + [c for c in (cluster_by or []) if c not in part_cols]
+            df = df.repartition(*part_cols).sortWithinPartitions(*sort_cols)
+            return managed_writer(df, "overwrite", codec, part_cols).option(
+                "maxRecordsPerFile", str(rpf)
             )
-        elif cluster_by:
-            writer = (
-                df.repartitionByRange(n_target, *cluster_by)
-                .sortWithinPartitions(*cluster_by)
-                .write.mode("overwrite")
-            )
+        n_target = max(1, -(-total // target_file_bytes))
+        if cluster_by:
+            df = df.repartitionByRange(n_target, *cluster_by).sortWithinPartitions(*cluster_by)
         else:
-            writer = df.repartition(n_target).write.mode("overwrite")
-        writer.parquet(new_dir)
-        # same invariant as every DML rewrite: read_table excluded the
-        # DISABLED partitions from the compaction input, so their files
-        # must be hard-linked into the new version before the swap —
-        # without this, OPTIMIZE silently and permanently destroyed
-        # out-of-service data (_swap GCs the old version dir)
-        carry_disabled(table_dir, new_dir)
-        _carry_side_state(real, new_dir)
-        _swap(table_dir, new_dir)
+            df = df.repartition(n_target)
+        return managed_writer(df, "overwrite", codec)
+
+    _optimistic_rewrite(
+        spark, table_dir, "OPTIMIZE", _observe_rows, None, codec,
+        max_retries=0, writer=shaped,
+    )
     return table_file_stats(table_dir)[0]

@@ -272,6 +272,8 @@ def test_dml_rewrites_keep_compression_codec(spark, sf_dir):
     # silently reverted to snappy before codec was threaded through)
     s.execute("ALTER TABLE ck ADD note VARCHAR(10) DEFAULT 'x'")
     s.execute("ALTER TABLE ck MODIFY v BIGINT")
+    # and so must OPTIMIZE's compaction rewrite
+    assert s.execute("OPTIMIZE TABLE ck").collect()[0].Msg_type == "status"
     real = os.path.realpath(s._managed["ck"])
     codecs = set()
     for f in glob.glob(os.path.join(real, "*.parquet")):
@@ -355,3 +357,21 @@ def test_empty_where_is_a_syntax_error_and_writes_nothing(sess, stmt):
     assert sess.execute("SHOW ERRORS").collect()[0][1] == 1064
     assert (os.path.realpath(path), _file_bytes(path)) == before
     assert sess.execute("SELECT COUNT(*) FROM m1 WHERE v > 0").collect()[0][0] == 4
+
+
+@pytest.mark.parametrize("stmt", [
+    "SELECT * FROM m1 WHERE",
+    "SELECT * FROM m1 WHERE;",
+    "SELECT v, COUNT(*) FROM m1 GROUP BY",
+    "SELECT v, COUNT(*) FROM m1 GROUP BY v HAVING",
+    "SELECT * FROM m1 ORDER BY",
+    "SELECT * FROM m1 LIMIT",
+    "SELECT * FROM m1 a JOIN region r ON",
+])
+def test_select_ending_in_a_clause_keyword_is_a_syntax_error(sess, stmt):
+    """A clause keyword with nothing after it is MySQL's error 1064: a
+    bare trailing WHERE must not become an alias that returns every
+    row."""
+    with pytest.raises(DialectError, match="without an argument"):
+        sess.execute(stmt)
+    assert sess.execute("SHOW ERRORS").collect()[0][1] == 1064

@@ -18,12 +18,19 @@ from pyspark.sql import functions as F
 
 from infinidb_spark.operators.dml import (
     ConcurrentWriteConflict,
+    _pin_version,
     _pins_dir,
+    _snapshot,
+    _table_lock,
+    _unpin,
+    alter_table,
     create_table,
     delete_from,
     read_table,
     update_table,
 )
+from infinidb_spark.operators.partitions import disable_partitions, disabled_partitions
+from infinidb_spark.sources.layout import compact_table, table_file_stats
 
 
 def _mk_table(spark, tmp_path, n=1000):
@@ -442,6 +449,21 @@ _VICTIMS = {
         dml._table_lock_wait = stall
         write_epoch_idempotent(EPOCH_ROWS(), 0, T, sink_id="s")
     """,
+    # an ALTER rewrite built, before its commit lock and swap
+    "alter_before_swap": """
+        import infinidb_spark.operators.dml as dml
+
+        locked = dml._table_lock_wait
+
+        def stall(table_dir, op, *a, **k):
+            if op == "ALTER":
+                open(MARKER, "w").close()
+                time.sleep(600)
+            return locked(table_dir, op, *a, **k)
+
+        dml._table_lock_wait = stall
+        dml.alter_table(spark, T, {"op": "drop", "column": "grp"})
+    """,
     # UPDATE swapped, before its pins are dropped and the stale version
     # collected (the GC runs under a lock of its own, taken here)
     "after_swap": """
@@ -485,9 +507,10 @@ def test_writer_killed_before_commit_is_garbage_collected(spark, tmp_path):
 def test_writer_killed_mid_statement_is_garbage_collected(spark, tmp_path, kill_point):
     """The same recovery for the other kill points: inside the UPDATE's
     Parquet write, with an INSERT's rows or a sink epoch staged before
-    the link-in, and after an UPDATE's swap before its GC (the table
-    then reads back as the exact post-image).  A killed sink epoch is
-    replayed once it has been collected, and lands exactly once."""
+    the link-in, with an ALTER's rewrite built before its swap, and
+    after an UPDATE's swap before its GC (the table then reads back as
+    the exact post-image).  A killed sink epoch is replayed once it has
+    been collected, and lands exactly once."""
     _kill_writer_and_check_recovery(spark, tmp_path, kill_point)
 
 
@@ -824,3 +847,106 @@ def test_failure_after_the_pointer_moved_keeps_the_new_version(
     out = read_table(spark, t)
     assert out.count() == (12 if writer == "insert" else 10)
     assert out.filter(F.col("v") == 1).count() == (0 if writer == "insert" else 5)
+
+
+#: DDL and table admin, each committing through one of the entry points,
+#: and what each leaves visible once committed
+_DDL = {
+    "alter": (
+        lambda spark, t: alter_table(spark, t, {"op": "modify", "column": "v", "type": "bigint"}),
+        lambda spark, t: dict(read_table(spark, t).dtypes)["v"] == "bigint",
+    ),
+    "optimize": (
+        lambda spark, t: compact_table(spark, t),
+        lambda spark, t: table_file_stats(t)[0] == 1,
+    ),
+    "disable_partitions": (
+        lambda spark, t: disable_partitions(t, "0"),
+        lambda spark, t: len(disabled_partitions(t)) == 1,
+    ),
+}
+
+
+@pytest.mark.parametrize("ddl", sorted(_DDL))
+def test_ddl_waits_for_the_commit_lock(spark, tmp_path, ddl):
+    """DDL builds outside the commit lock and waits for it (bounded) like
+    every row writer: issued while another holder keeps the lock for
+    about a second, it waits and then succeeds."""
+    run, committed = _DDL[ddl]
+    t = _mk_table(spark, tmp_path, n=100)
+    before = os.path.realpath(t)
+    cm = _table_lock(t, "UPDATE")
+    cm.__enter__()
+    release = threading.Timer(1.0, cm.__exit__, (None, None, None))
+    release.start()
+    try:
+        run(spark, t)
+    finally:
+        release.join()
+    assert os.path.realpath(t) != before
+    assert committed(spark, t)
+    assert _no_debris(t)
+
+
+def test_admin_commits_leave_the_pinned_pre_image_untouched(spark):
+    """ANALYZE and partition enable/disable commit a relinked private
+    version: a pinned pre-image keeps every file name and identity
+    (no sidecar is written into it, and no linked name is written
+    through)."""
+    from infinidb_spark.session import InfiniSession
+
+    s = InfiniSession(spark)
+    s.execute("CREATE TABLE pa (id BIGINT, v BIGINT)")
+    for i in range(3):
+        s.execute(f"INSERT INTO pa VALUES ({i}, {i * 10})")
+    t = s._managed["pa"]
+    for stmt in (
+        "ANALYZE TABLE pa",
+        "SELECT caldisablepartitions('pa', '0')",
+        "SELECT calenablepartitions('pa', '0')",
+    ):
+        pre = os.path.realpath(t)
+        pin = _pin_version(t, os.path.basename(pre))
+        try:
+            identity = (_snapshot(pre)[2], sorted(os.listdir(pre)))
+            s.execute(stmt)
+            assert os.path.realpath(t) != pre, stmt
+            assert (_snapshot(pre)[2], sorted(os.listdir(pre))) == identity, stmt
+        finally:
+            _unpin(pin)
+    assert os.path.exists(os.path.join(t, "_infinidb_manifest.json"))
+    assert disabled_partitions(t) == set()
+    assert s.execute("SELECT COUNT(*) FROM pa").collect()[0][0] == 3
+
+
+def test_insert_during_an_alter_rewrite_aborts_the_alter(spark, tmp_path, monkeypatch):
+    """An ALTER rewrite holds no lock while it builds: an INSERT commits
+    meanwhile without waiting, and the ALTER, finding its snapshot
+    changed, aborts (DDL never rebases).  The table keeps the INSERT's
+    rows in the old schema."""
+    import infinidb_spark.operators.dml as dml
+
+    t = _mk_table(spark, tmp_path, n=100)
+    rows = spark.range(100, 110).select(
+        F.col("id").cast("bigint").alias("k"),
+        F.lit(0).cast("int").alias("grp"),
+        F.lit(7).cast("int").alias("v"),
+    )
+    locked = dml._table_lock_wait
+    inserted = []
+
+    def insert_first(table_dir, op, *a, **k):
+        if op == "ALTER" and not inserted:
+            # lock_timeout=0: the INSERT must not wait for the ALTER
+            inserted.append(dml.insert_into(rows, t, lock_timeout=0))
+        return locked(table_dir, op, *a, **k)
+
+    monkeypatch.setattr(dml, "_table_lock_wait", insert_first)
+    with pytest.raises(ConcurrentWriteConflict):
+        alter_table(spark, t, {"op": "drop", "column": "grp"})
+    assert inserted == [10]
+    out = read_table(spark, t)
+    assert out.columns == ["k", "grp", "v"]
+    assert out.count() == 110
+    assert out.filter(F.col("v") == 7).count() == 10
+    assert _no_debris(t)
